@@ -9,6 +9,11 @@ import org.apache.spark.sql.SparkSession
   * Usage: sbt "runMain graft.PlanSweep [sfDir]"
   */
 object PlanSweep {
+  /** How many plan lines are headed by a node named exactly `name`:
+    * `BroadcastExchange` and `ReusedExchange` are not an `Exchange`. */
+  def nodeCount(plan: String, name: String): Int =
+    s"(?m)^[ :+-]*(\\*\\(\\d+\\) )?$name\\b".r.findAllIn(plan).size
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = SparkSession.builder()
@@ -23,10 +28,10 @@ object PlanSweep {
       try {
         val df = SparkEntry.queries(n)(spark, sfDir)
         val p = df.queryExecution.executedPlan.toString
-        def c(tok: String) = p.sliding(tok.length).count(_ == tok)
+        def c(name: String) = nodeCount(p, name)
         println(s"PLANSWEEP $n ex=${c("Exchange")} bnlj=${c("BroadcastNestedLoopJoin")}" +
           s" smj=${c("SortMergeJoin")} sortagg=${c("SortAggregate")}" +
-          s" cart=${c("CartesianProduct")} gen=${c("Generate ")} objagg=${c("ObjectHashAggregate")}")
+          s" cart=${c("CartesianProduct")} gen=${c("Generate")} objagg=${c("ObjectHashAggregate")}")
       } catch { case e: Throwable =>
         println(s"PLANSWEEP $n ERROR ${e.getClass.getSimpleName}")
       }

@@ -155,8 +155,7 @@ object EventTime {
   private val replaySrcWritten = new SessionArtifact[String]
   private def replaySrc(s: org.apache.spark.sql.SparkSession, dir: String): String =
     replaySrcWritten(s, dir) {
-      val p = s"${sys.props("java.io.tmpdir")}/graft_scratch/stream_replay_" +
-        SessionArtifact.dirTag(dir)
+      val p = Scratch.shared(s, dir, "stream_replay")
       Tables.events(s, dir).write.mode("overwrite").parquet(p)
       p
     }
@@ -476,8 +475,7 @@ object EventTime {
   private val wmReplayWritten = new SessionArtifact[String]
   private def wmReplaySrc(s: org.apache.spark.sql.SparkSession, dir: String): String =
     wmReplayWritten(s, dir) {
-      val p = s"${sys.props("java.io.tmpdir")}/graft_scratch/stream_replay_wm_" +
-        SessionArtifact.dirTag(dir)
+      val p = Scratch.shared(s, dir, "stream_replay_wm")
       val ev = Tables.events(s, dir)
       ev.repartitionByRange(8, col("ts")).sortWithinPartitions("ts")
         .write.mode("overwrite").parquet(p)
@@ -811,16 +809,10 @@ object EventTime {
     (s, dir) => {
       val src = wmReplaySrc(s, dir)
       val s2 = replaySession(s)
-      val runDir = s"${sys.props("java.io.tmpdir")}/graft_scratch/sink_commit_" +
-        SessionArtifact.dirTag(dir)
+      val runDir = Scratch.perCall(s, "sink_commit")
       // wipe the previous run's log so a changed fixture can never be
       // served stale; the commit protocol below rebuilds it
-      val root = new java.io.File(runDir)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      if (root.exists) rm(root)
+      Scratch.empty(runDir)
       new java.io.File(s"$runDir/commits").mkdirs()
       new java.io.File(s"$runDir/data").mkdirs()
       val q = s2.readStream.schema(Tables.expectedSchemas("events"))
@@ -887,8 +879,7 @@ object EventTime {
   private val eoSrcWritten = new SessionArtifact[String]
   private def eoSrc(s: org.apache.spark.sql.SparkSession, dir: String): String =
     eoSrcWritten(s, dir) {
-      val p = s"${sys.props("java.io.tmpdir")}/graft_scratch/stream_eo_src_" +
-        SessionArtifact.dirTag(dir)
+      val p = Scratch.shared(s, dir, "stream_eo_src")
       Tables.events(s, dir).repartition(12).write.mode("overwrite").parquet(p)
       p
     }
@@ -923,16 +914,10 @@ object EventTime {
     (s, dir) => {
       val src = eoSrc(s, dir)
       val s2 = replaySession(s)
-      val runDir = s"${sys.props("java.io.tmpdir")}/graft_scratch/stream_eo_run_" +
-        SessionArtifact.dirTag(dir)
+      val runDir = Scratch.perCall(s, "stream_eo_run")
       // wipe the previous build's checkpoint + committed log: this op
       // grades the crash/restart protocol, so every build re-runs it
-      val root = new java.io.File(runDir)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      if (root.exists) rm(root)
+      Scratch.empty(runDir)
       new java.io.File(s"$runDir/commits").mkdirs()
       new java.io.File(s"$runDir/data").mkdirs()
       def run(failAtBatch: Long): Unit = {
@@ -2686,12 +2671,7 @@ object EventTime {
   private val cepReplayWritten = new SessionArtifact[String]
   private def cepReplaySrc(s: org.apache.spark.sql.SparkSession, dir: String): String =
     cepReplayWritten(s, dir) {
-      // process-unique path (appTag, the occ_commit/wap/branch rule): a
-      // second JVM's mode-overwrite must not swap range files under this
-      // JVM's in-flight micro-batch replay
-      val appTag = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft_scratch/stream_replay_cep_" +
-        SessionArtifact.dirTag(dir) + "_" + appTag
+      val p = Scratch.shared(s, dir, "stream_replay_cep")
       Tables.events(s, dir).repartitionByRange(4, col("ts"))
         .sortWithinPartitions("ts")
         .write.mode("overwrite").parquet(p)

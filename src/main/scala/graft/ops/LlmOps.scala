@@ -1396,11 +1396,21 @@ object LlmOps {
       // frame is pair-set-bounded (one row per clustered id), so the
       // checkpoint is tiny and each round now computes exactly once —
       // the same flat-loop discipline starRound already applies.
-      lbl = lbl.join(peerMin, "id")
+      val next = lbl.join(peerMin, "id")
         .select(col("id"), least(col("lbl"), col("pmin")).as("lbl"))
         .localCheckpoint(true)
+      releaseCheckpoint(lbl) // materialized `next` no longer reads it
+      lbl = next
     }
+    releaseCheckpoint(edges)
     lbl
+  }
+
+  /** Frees an eager `localCheckpoint`'s blocks (no-op for other frames);
+    * `Dataset.unpersist` misses them, the cache manager never saw them. */
+  private def releaseCheckpoint(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false); ()
+    case _ => ()
   }
 
   /** Connected components + min-label SQL suffix over a `vp(a_id, b_id)`
@@ -5472,8 +5482,7 @@ object LlmOps {
       graft.functions.SqDist.register(s)
       graft.functions.NearestCells.register(s)
       graft.functions.SortedIntersectCount.register(s)
-      val p = s"${sys.props("java.io.tmpdir")}/graft_scratch/model_store_" +
-        SessionArtifact.dirTag(dir)
+      val p = Scratch.shared(s, dir, "model_store")
       ivfCents(s, dir).write.mode("overwrite").parquet(s"$p/ivf_centroids")
       val (cb, codes) = pqFit(s, dir)
       cb.write.mode("overwrite").parquet(s"$p/pq_codebook")
@@ -5607,19 +5616,10 @@ object LlmOps {
     (s, dir) => {
       graft.functions.SqDist.register(s)
       graft.functions.NearestCells.register(s)
-      // JVM-unique scratch component: two concurrent sessions on the
-      // same fixture would otherwise rm-recreate each other's root
-      // mid-protocol (r19 ADVICE)
-      val p = s"${sys.props("java.io.tmpdir")}/graft_scratch/model_refresh_" +
-        SessionArtifact.dirTag(dir) + "_p" + ProcessHandle.current().pid()
+      val p = Scratch.perCall(s, "model_refresh")
       // the protocol IS the graded subject: every build re-runs it
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      val root = new java.io.File(p)
-      if (root.exists) rm(root)
-      root.mkdirs()
+      Scratch.empty(p)
+      new java.io.File(p).mkdirs()
       def publish(df: DataFrame, ver: String): Unit = {
         val stage = s"$p/_staging_$ver"
         df.write.mode("overwrite").parquet(stage)

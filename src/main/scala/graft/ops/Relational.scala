@@ -120,7 +120,7 @@ object Relational {
   private val morLogWritten = new SessionArtifact[String]
   private def morLog(s: SparkSession, dir: String): String =
     morLogWritten(s, dir) {
-      val p = scratch("mor_log_" + SessionArtifact.dirTag(dir))
+      val p = Scratch.shared(s, dir, "mor_log")
       val o = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_orderstatus").as("status"),
           col("o_totalprice").as("price"))
@@ -272,7 +272,7 @@ object Relational {
       val log = morLog(s, dir)
       // the compacted output stays op-PRIVATE scratch (only the input
       // log is shared): compaction owns its rewrite target
-      val tmp = scratch("sink_compact")
+      val tmp = Scratch.perCall(s, "sink_compact")
       val folded = foldLatest(
         s.read.parquet(s"$log/base")
           .select(col("o_orderkey"), col("status"), col("price"),
@@ -336,7 +336,7 @@ object Relational {
     "sink_manifest_rewrite",
     (s, dir) => {
       val log = morLog(s, dir)
-      val tmp = scratch("sink_manifest_rewrite")
+      val tmp = Scratch.perCall(s, "sink_manifest_rewrite")
       val folded = foldLatest(
         s.read.parquet(s"$log/base")
           .select(col("o_orderkey"), col("status"), col("price"),
@@ -523,7 +523,7 @@ object Relational {
   private val mvArtifact = new SessionArtifact[String]
   private def mvDirs(s: SparkSession, dir: String): String =
     mvArtifact(s, dir) {
-      val p = scratch("mv_incr_" + SessionArtifact.dirTag(dir))
+      val p = Scratch.shared(s, dir, "mv_incr")
       val log = morLog(s, dir)
       // the persisted MV total stays DECIMAL(18,2) end-to-end (round-14
       // ADVICE): a DoubleType round-trip is exact only under 2^53 cents,
@@ -592,7 +592,7 @@ object Relational {
   private val mvServingWritten = new SessionArtifact[String]
   private def mvServing(s: SparkSession, dir: String): String =
     mvServingWritten(s, dir) {
-      val p = scratch("mv_serving_" + SessionArtifact.dirTag(dir))
+      val p = Scratch.shared(s, dir, "mv_serving")
       mvMaintained(s, dir).write.mode("overwrite").parquet(p)
       p
     }
@@ -786,7 +786,7 @@ object Relational {
   private val vacuumDone = new SessionArtifact[String]
   private def vacuumedLog(s: SparkSession, dir: String): String =
     vacuumDone(s, dir) {
-      val p = scratch("vacuum_log_" + SessionArtifact.dirTag(dir))
+      val p = Scratch.shared(s, dir, "vacuum_log")
       val c = Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_acctbal").as("bal"),
           col("c_mktsegment").as("segment"))
@@ -884,17 +884,15 @@ object Relational {
     * live row set at the retention floor and is amortized over every
     * later read (no fold across expired deltas ever again). At 100 TB
     * this is the op that keeps time travel from meaning "retain every
-    * byte forever". Scratch is process-unique (the OCC treatment):
-    * the rebuild is destructive, so two JVMs must not share it.
+    * byte forever".
     */
   private val expireWritten = new SessionArtifact[String]
   private[graft] def expiredLog(s: SparkSession, dir: String): String =
     expireWritten(s, dir) {
-      val appTag = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-      val p = scratch("snap_expire_" + SessionArtifact.dirTag(dir) + "_" + appTag)
+      val p = Scratch.shared(s, dir, "snap_expire")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(p), true)
+      Scratch.empty(p)
       new java.io.File(s"$p/_commits").mkdirs()
       val sup = Tables.supplier(s, dir)
         .select(col("s_suppkey"), col("s_nationkey").as("nation"),
@@ -1211,11 +1209,10 @@ object Relational {
   private[graft] def orphanCleanup(
       s: SparkSession, dir: String): (String, Int, Int, Int) =
     orphanWritten(s, dir) {
-      val appTag = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-      val p = scratch("orphan_" + SessionArtifact.dirTag(dir) + "_" + appTag)
+      val p = Scratch.shared(s, dir, "orphan")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(p), true)
+      Scratch.empty(p)
       Tables.lineitem(s, dir)
         .filter(col("l_orderkey") % 50 === 0)
         .select(col("l_orderkey"), col("l_linenumber"),
@@ -1304,11 +1301,8 @@ object Relational {
   private val wapWritten = new SessionArtifact[(String, Long, Long, Long)]
   private[graft] def wapLog(s: SparkSession, dir: String): (String, Long, Long, Long) =
     wapWritten(s, dir) {
-      val appTag = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-      val p = scratch("wap_" + SessionArtifact.dirTag(dir) + "_" + appTag)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(p), true)
+      val p = Scratch.shared(s, dir, "wap")
+      Scratch.empty(p)
       new java.io.File(s"$p/_commits").mkdirs()
       Tables.customer(s, dir).filter(col("c_custkey") % 4 === 0)
         .select((col("c_custkey") + 50000000L).as("c_custkey"),
@@ -1407,17 +1401,13 @@ object Relational {
     * (manifests list different file sets); publish costs the
     * disjointness semi-join over the CHANGED keys since the branch
     * point, never the table — why branch-and-publish is how 100 TB
-    * pipelines stage risky backfills. Scratch is process-unique (the
-    * OCC treatment): the rebuild is destructive.
+    * pipelines stage risky backfills.
     */
   private val branchWritten = new SessionArtifact[(String, Long)]
   private[graft] def branchLog(s: SparkSession, dir: String): (String, Long) =
     branchWritten(s, dir) {
-      val appTag = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-      val p = scratch("branch_merge_" + SessionArtifact.dirTag(dir) + "_" + appTag)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(p), true)
+      val p = Scratch.shared(s, dir, "branch_merge")
+      Scratch.empty(p)
       new java.io.File(s"$p/_commits").mkdirs()
       new java.io.File(s"$p/branches/dev").mkdirs()
       val pt = Tables.part(s, dir)
@@ -1604,12 +1594,6 @@ object Relational {
     },
     None)
 
-  /** Fixed per-JVM scratch root: repeated invocations overwrite in place
-    * instead of accumulating fresh createTempDirectory dirs in /tmp.
-    */
-  private def scratch(sub: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_scratch/$sub"
-
   /** Tracks which (session, fixture dir) pairs already wrote the bucketed
     * tables for `join_bucketed` — the write is the op's "once at write
     * time" cost and must not repeat per build. */
@@ -1624,7 +1608,7 @@ object Relational {
   val sinkParquet: Op = Op(
     "sink_parquet_roundtrip",
     (s, dir) => {
-      val tmp = scratch("sink_pq")
+      val tmp = Scratch.perCall(s, "sink_pq")
       Tables.supplier(s, dir)
         .groupBy("s_nationkey")
         .agg(count(lit(1)).as("n_supp"), sumMoney(dec2(col("s_acctbal"))).as("bal"))
@@ -1647,7 +1631,7 @@ object Relational {
   val sinkCsvJson: Op = Op(
     "sink_csv_json_roundtrip",
     (s, dir) => {
-      val tmp = scratch("sink_cj")
+      val tmp = Scratch.perCall(s, "sink_cj")
       val n = Tables.nation(s, dir)
       n.write.mode("overwrite").option("header", "true").csv(s"$tmp/csv")
       n.write.mode("overwrite").json(s"$tmp/json")
@@ -1679,7 +1663,7 @@ object Relational {
   val scanTextRoundtrip: Op = Op(
     "scan_text_roundtrip",
     (s, dir) => {
-      val tmp = scratch("scan_text")
+      val tmp = Scratch.perCall(s, "scan_text")
       Tables.nation(s, dir)
         .select(concat_ws("\t", col("n_nationkey"), col("n_name"),
           col("n_regionkey")).as("value"))
@@ -1708,7 +1692,7 @@ object Relational {
   val scanXmlRoundtrip: Op = Op(
     "scan_xml_roundtrip",
     (s, dir) => {
-      val tmp = scratch("scan_xml")
+      val tmp = Scratch.perCall(s, "scan_xml")
       Tables.region(s, dir)
         .write.mode("overwrite").option("rowTag", "row")
         .format("xml").save(tmp)
@@ -1734,7 +1718,7 @@ object Relational {
   val sinkCodecRoundtrip: Op = Op(
     "sink_codec_roundtrip",
     (s, dir) => {
-      val tmp = scratch("sink_codec")
+      val tmp = Scratch.perCall(s, "sink_codec")
       val agg = Tables.supplier(s, dir)
         .groupBy("s_nationkey")
         .agg(count(lit(1)).as("n_supp"),
@@ -1781,7 +1765,7 @@ object Relational {
   val sinkOrcRoundtrip: Op = Op(
     "sink_orc_roundtrip",
     (s, dir) => {
-      val tmp = scratch("sink_orc")
+      val tmp = Scratch.perCall(s, "sink_orc")
       Tables.orders(s, dir).write.mode("overwrite").orc(s"$tmp/orders_orc")
       s.read.orc(s"$tmp/orders_orc")
         .groupBy("o_orderstatus")
@@ -1816,7 +1800,7 @@ object Relational {
   val sinkPartitionedPrune: Op = Op(
     "sink_partitioned_prune",
     (s, dir) => {
-      val tmp = scratch("sink_part")
+      val tmp = Scratch.perCall(s, "sink_part")
       Tables.documents(s, dir)
         .write.mode("overwrite").partitionBy("lang").parquet(s"$tmp/docs_by_lang")
       s.read.parquet(s"$tmp/docs_by_lang")
@@ -1860,7 +1844,7 @@ object Relational {
   private val posDeleteWritten = new SessionArtifact[String]
   private def posDeleteDirs(s: SparkSession, dir: String): String =
     posDeleteWritten(s, dir) {
-      val p = scratch("pos_delete_" + SessionArtifact.dirTag(dir))
+      val p = Scratch.shared(s, dir, "pos_delete")
       Tables.orders(s, dir)
         .repartition(4, col("o_orderkey"))
         .write.mode("overwrite").parquet(s"$p/base")
@@ -1914,7 +1898,7 @@ object Relational {
   private val eqDeleteWritten = new SessionArtifact[String]
   private def eqDeleteDirs(s: SparkSession, dir: String): String =
     eqDeleteWritten(s, dir) {
-      val p = scratch("eq_delete_" + SessionArtifact.dirTag(dir))
+      val p = Scratch.shared(s, dir, "eq_delete")
       val o = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_orderstatus").as("status"),
           col("o_totalprice").as("price"))
@@ -2095,20 +2079,8 @@ object Relational {
   private val occWritten = new SessionArtifact[(String, Long)]
   private def occCommitLog(s: SparkSession, dir: String): (String, Long) =
     occWritten(s, dir) {
-      // process-unique scratch (round-14 ADVICE): unlike the other
-      // scratch artifacts (idempotent overwrites), this op DESTRUCTIVELY
-      // rebuilds its commit dir and then CASes marker files whose
-      // create-exactly-once outcome is the graded point — two JVMs/gates
-      // sharing java.io.tmpdir must not race one marker dir, so the
-      // path carries the Spark application id (unique per context).
-      val appTag = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-      val p = scratch("occ_commit_" + SessionArtifact.dirTag(dir) + "_" + appTag)
-      val root = new java.io.File(p)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      if (root.exists) rm(root)
+      val p = Scratch.shared(s, dir, "occ_commit")
+      Scratch.empty(p)
       new java.io.File(s"$p/_commits").mkdirs()
       val o = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_orderstatus").as("status"),
@@ -2125,7 +2097,7 @@ object Relational {
             java.nio.file.Paths.get(s"$p/delta_v$v"),
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)
           true
-        } else { rm(new java.io.File(tmp)); conflicts += 1; false }
+        } else { Scratch.empty(tmp); conflicts += 1; false }
       }
       val deltaA = o.filter(col("o_orderkey") % 4 === 0)
         .select(col("o_orderkey"), col("status"),
@@ -2220,7 +2192,7 @@ object Relational {
   private val partEvoWritten = new SessionArtifact[String]
   private def partEvoDirs(s: SparkSession, dir: String): String =
     partEvoWritten(s, dir) {
-      val p = scratch("part_evo_" + SessionArtifact.dirTag(dir))
+      val p = Scratch.shared(s, dir, "part_evo")
       val o = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderdate"),
@@ -2278,7 +2250,7 @@ object Relational {
   val sinkSchemaEvolution: Op = Op(
     "sink_schema_evolution",
     (s, dir) => {
-      val tmp = scratch("sink_evo")
+      val tmp = Scratch.perCall(s, "sink_evo")
       val d = Tables.documents(s, dir)
       d.select(col("doc_id"), lit("a").as("tag"), col("lang"))
         .write.mode("overwrite").parquet(s"$tmp/evo")
@@ -2358,7 +2330,7 @@ object Relational {
       // one session can't serve each other stale buckets
       val tag = SessionArtifact.dirTag(dir)
       bucketedWritten(s, dir) {
-        val tmp = scratch(s"bucketed_$tag")
+        val tmp = Scratch.shared(s, dir, "bucketed")
         def writeBucketed(df: DataFrame, key: String, table: String): Unit = {
           s.sql(s"DROP TABLE IF EXISTS $table")
           df.write.mode("overwrite")
@@ -3503,7 +3475,7 @@ object Relational {
   val scanCsvPermissive: Op = Op(
     "scan_csv_permissive",
     (s, dir) => {
-      val tmp = scratch("csv_permissive")
+      val tmp = Scratch.perCall(s, "csv_permissive")
       val k = col("o_orderkey")
       val clean = concat(k, lit(","), col("o_orderstatus"), lit(","),
         dec2(col("o_totalprice")))
@@ -3563,7 +3535,7 @@ object Relational {
   val scanJsonPermissive: Op = Op(
     "scan_json_permissive",
     (s, dir) => {
-      val tmp = scratch("json_permissive")
+      val tmp = Scratch.perCall(s, "json_permissive")
       val k = col("o_orderkey")
       val pre = concat(lit("{\"k\":"), k,
         lit(",\"status\":\""), col("o_orderstatus"), lit("\""))
@@ -3777,17 +3749,13 @@ object Relational {
     * Scale shape: schema evolution is a METADATA operation plus the
     * delta write — the 100 TB point is precisely that adding a column
     * costs zero bytes of rewrite on the existing table; the fold is
-    * the same co-keyed shuffle as merge_upsert. Scratch is
-    * process-unique (appTag): the base+delta rebuild is destructive.
+    * the same co-keyed shuffle as merge_upsert.
     */
   private val mergeEvolveWritten = new SessionArtifact[String]
   private[graft] def mergeEvolveLog(s: SparkSession, dir: String): String =
     mergeEvolveWritten(s, dir) {
-      val appTag = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-      val p = scratch("merge_evolve_" + SessionArtifact.dirTag(dir) + "_" + appTag)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(p), true)
+      val p = Scratch.shared(s, dir, "merge_evolve")
+      Scratch.empty(p)
       val t = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_orderstatus").as("status"),
           col("o_totalprice").as("price"))
@@ -4013,8 +3981,7 @@ object Relational {
   private val dppWritten = new SessionArtifact[String]
   private def dppFacts(s: SparkSession, dir: String): String =
     dppWritten(s, dir) {
-      val p = s"${sys.props("java.io.tmpdir")}/graft_scratch/dpp_" +
-        SessionArtifact.dirTag(dir)
+      val p = Scratch.shared(s, dir, "dpp")
       Tables.documents(s, dir)
         .write.mode("overwrite").partitionBy("lang").parquet(p)
       p
@@ -4066,7 +4033,7 @@ object Relational {
   val scanNestedPrune: Op = Op(
     "scan_nested_prune",
     (s, dir) => {
-      val tmp = scratch("scan_nested")
+      val tmp = Scratch.perCall(s, "scan_nested")
       Tables.documents(s, dir)
         .select(col("doc_id"),
           struct(col("lang"), col("source"), col("n_chars")).as("meta"),
@@ -4138,7 +4105,7 @@ object Relational {
   private def cboTables(s: SparkSession, dir: String): String = {
     val tag = SessionArtifact.dirTag(dir)
     cboWritten(s, dir) {
-      val tmp = scratch(s"cbo_$tag")
+      val tmp = Scratch.shared(s, dir, "cbo")
       def writeT(df: DataFrame, table: String, statCols: String): Unit = {
         s.sql(s"DROP TABLE IF EXISTS $table")
         df.write.mode("overwrite").option("path", s"$tmp/$table")
@@ -4217,7 +4184,7 @@ object Relational {
   val sinkClusteredPrune: Op = Op(
     "sink_clustered_prune",
     (s, dir) => {
-      val tmp = scratch("sink_cluster")
+      val tmp = Scratch.perCall(s, "sink_cluster")
       Tables.orders(s, dir)
         .repartitionByRange(8, col("o_totalprice"), col("o_orderkey"))
         .sortWithinPartitions("o_totalprice", "o_orderkey")
@@ -4272,8 +4239,7 @@ object Relational {
   private val clusteredOrdersWritten = new SessionArtifact[String]
   private def clusteredOrders(s: SparkSession, dir: String): String =
     clusteredOrdersWritten(s, dir) {
-      val p = scratch("clustered_orders_" + SessionArtifact.dirTag(dir)) +
-        "/orders_by_price"
+      val p = Scratch.shared(s, dir, "clustered_orders") + "/orders_by_price"
       Tables.orders(s, dir)
         .repartitionByRange(8, col("o_totalprice"), col("o_orderkey"))
         .sortWithinPartitions("o_totalprice", "o_orderkey")
@@ -4284,7 +4250,7 @@ object Relational {
   private val statsIndexWritten = new SessionArtifact[String]
   private def statsIndexDirs(s: SparkSession, dir: String): String =
     statsIndexWritten(s, dir) {
-      val p = scratch("stats_index_" + SessionArtifact.dirTag(dir))
+      val p = Scratch.shared(s, dir, "stats_index")
       s.read.parquet(clusteredOrders(s, dir))
         .select(col("_metadata.file_path").as("file_path"), col("o_totalprice"))
         .groupBy("file_path")
@@ -4359,7 +4325,7 @@ object Relational {
   private val bloomIndexWritten = new SessionArtifact[String]
   private def bloomIndexDirs(s: SparkSession, dir: String): String =
     bloomIndexWritten(s, dir) {
-      val p = scratch("bloom_index_" + SessionArtifact.dirTag(dir))
+      val p = Scratch.shared(s, dir, "bloom_index")
       s.read.parquet(clusteredOrders(s, dir))
         .select(col("_metadata.file_path").as("file_path"),
           col("o_orderkey").as("k"))
@@ -4580,7 +4546,7 @@ object Relational {
   val sinkZorderPrune: Op = Op(
     "sink_zorder_prune",
     (s, dir) => {
-      val tmp = scratch("sink_zorder")
+      val tmp = Scratch.perCall(s, "sink_zorder")
       // 16-bit normalizations RELATIVE to each column's observed domain
       // (a raw interleave degenerates to a 1-D sort when one domain is
       // much smaller — its high bits are constant zero): the bounds ride
@@ -4648,7 +4614,7 @@ object Relational {
     "sink_hilbert_prune",
     (s, dir) => {
       graft.functions.HilbertIndex.register(s)
-      val tmp = scratch("sink_hilbert")
+      val tmp = Scratch.perCall(s, "sink_hilbert")
       val bounds = Tables.orders(s, dir).agg(
         max(col("o_custkey")).as("max_ck"),
         max(expr("cast(round(o_totalprice * 100) as bigint)")).as("max_pc"))

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ops.Scratch
 import graft.tables.Tables
 
 /** SURVEY §2.1 capability notes, exercised: partitioned writes with
@@ -47,8 +48,7 @@ class SinkCapabilitySuite extends AnyFunSuite {
     // does from statistics alone, proven from the footers it would use
     val df = SparkEntry.queries("sink_clustered_prune")(s, TestSpark.Sf0001)
     df.collect() // ensure the write ran
-    val dir = new java.io.File(
-      s"${sys.props("java.io.tmpdir")}/graft_scratch/sink_cluster/orders_by_price")
+    val dir = new java.io.File(Scratch.perCall(s, "sink_cluster") + "/orders_by_price")
     val parts = dir.listFiles().filter(_.getName.endsWith(".parquet"))
     assert(parts.length >= 4, s"expected multiple clustered files, got ${parts.length}")
     val conf = s.sparkContext.hadoopConfiguration
@@ -82,8 +82,7 @@ class SinkCapabilitySuite extends AnyFunSuite {
   test("sink_stats_index: index matches footers; graded scan opens only surviving files") {
     val df = SparkEntry.queries("sink_stats_index")(s, TestSpark.Sf0001)
     df.collect() // ensure the rewrite + index build ran
-    val root = s"${sys.props("java.io.tmpdir")}/graft_scratch/stats_index_" +
-      graft.ops.SessionArtifact.dirTag(TestSpark.Sf0001)
+    val root = Scratch.shared(s, TestSpark.Sf0001, "stats_index")
     val stats = s.read.parquet(s"$root/stats")
       .collect().map(r => r.getString(0) ->
         ((r.getDouble(1), r.getDouble(2), r.getLong(3)))).toMap
@@ -129,8 +128,7 @@ class SinkCapabilitySuite extends AnyFunSuite {
     val byKey = surv.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     assert(byKey.nonEmpty, "no probe keys at sf0.001 — fixture drifted")
     // ground truth: the file that actually holds each probe key
-    val root = s"${sys.props("java.io.tmpdir")}/graft_scratch/clustered_orders_" +
-      graft.ops.SessionArtifact.dirTag(TestSpark.Sf0001)
+    val root = Scratch.shared(s, TestSpark.Sf0001, "clustered_orders")
     val truth = s.read.parquet(s"$root/orders_by_price")
       .filter(col("o_orderkey") % 2500 === 0)
       .select(col("o_orderkey"), col("_metadata.file_path"))
@@ -155,12 +153,7 @@ class SinkCapabilitySuite extends AnyFunSuite {
     // the graded columns carry the protocol outcome: one real conflict
     assert(rows.forall(_.getLong(4) == 1L), "writer B's v1 CAS must have failed once")
     assert(rows.forall(_.getLong(3) == 3L), "expected exactly v0..v2 commits")
-    // the scratch dir is process-unique (round-14 advice): the path
-    // carries the Spark application id next to the fixture tag
-    val appTag = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val root = new java.io.File(
-      s"${sys.props("java.io.tmpdir")}/graft_scratch/occ_commit_" +
-        graft.ops.SessionArtifact.dirTag(TestSpark.Sf0001) + "_" + appTag)
+    val root = new java.io.File(Scratch.shared(s, TestSpark.Sf0001, "occ_commit"))
     assert(new java.io.File(root, "_commits").list().sorted.toSeq
         == Seq("v0", "v1", "v2"), "marker log must hold the serial history")
     assert(new java.io.File(root, "delta_v1").isDirectory
@@ -302,8 +295,7 @@ class SinkCapabilitySuite extends AnyFunSuite {
     }.toMap
     assert(byGen.keySet == Set("gen1", "gen2"),
       s"window must straddle the evolution point, got scans: $byGen")
-    val root = s"${sys.props("java.io.tmpdir")}/graft_scratch/part_evo_" +
-      graft.ops.SessionArtifact.dirTag(TestSpark.Sf0001)
+    val root = Scratch.shared(s, TestSpark.Sf0001, "part_evo")
     def filesUnder(sub: String): Long =
       Option(new java.io.File(s"$root/$sub").listFiles()).map(
         _.count(_.getName.endsWith(".parquet")).toLong).getOrElse(0L)
@@ -324,8 +316,7 @@ class SinkCapabilitySuite extends AnyFunSuite {
     // span wide where the 8 equal-count chunks cut across a Z-curve
     // fold — inherent to Morton order, not a layout bug.)
     SparkEntry.queries("sink_zorder_prune")(s, TestSpark.Sf0001).collect()
-    val dir = new java.io.File(
-      s"${sys.props("java.io.tmpdir")}/graft_scratch/sink_zorder/orders_zorder")
+    val dir = new java.io.File(Scratch.perCall(s, "sink_zorder") + "/orders_zorder")
     val parts = dir.listFiles().filter(_.getName.endsWith(".parquet"))
     assert(parts.length >= 4)
     val conf = s.sparkContext.hadoopConfiguration
@@ -361,8 +352,7 @@ class SinkCapabilitySuite extends AnyFunSuite {
     // a key range is a compact blob, so no file needs the boundary-file
     // exemption Morton's quadrant folds require
     SparkEntry.queries("sink_hilbert_prune")(s, TestSpark.Sf0001).collect()
-    val dir = new java.io.File(
-      s"${sys.props("java.io.tmpdir")}/graft_scratch/sink_hilbert/orders_hilbert")
+    val dir = new java.io.File(Scratch.perCall(s, "sink_hilbert") + "/orders_hilbert")
     val parts = dir.listFiles().filter(_.getName.endsWith(".parquet"))
     assert(parts.length >= 4)
     val conf = s.sparkContext.hadoopConfiguration
@@ -503,7 +493,7 @@ class SinkCapabilitySuite extends AnyFunSuite {
     // zero deltas and re-aggregating reproduces the graded output
     val graded = graft.ops.Relational.sinkCompactRewrite.build(s, TestSpark.Sf0001)
       .collect().toSeq
-    val tmp = s"${sys.props("java.io.tmpdir")}/graft_scratch/sink_compact"
+    val tmp = Scratch.perCall(s, "sink_compact")
     val again = s.read.parquet(s"$tmp/compacted")
       .groupBy(col("status"), (col("o_orderkey") % 3).as("shard"))
       .agg(count(lit(1)).as("n"),

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.EventTime
+import graft.ops.{EventTime, Scratch}
 import graft.tables.Tables
 
 /** Arbitrary-state demo processor for the transformWithState test: one
@@ -653,8 +653,7 @@ class StreamingSuite extends AnyFunSuite {
   test("stream_replay_sink_commit: one committed dir + one mark per batch, rerun identical") {
     val first = EventTime.streamReplaySinkCommit.build(s, TestSpark.Sf0001)
       .collect().toSeq
-    val runDir = s"${sys.props("java.io.tmpdir")}/graft_scratch/sink_commit_" +
-      graft.ops.SessionArtifact.dirTag(TestSpark.Sf0001)
+    val runDir = Scratch.perCall(s, "sink_commit")
     val dataDirs = new java.io.File(s"$runDir/data").listFiles()
       .filter(_.isDirectory).map(_.getName).sorted.toSeq
     val marks = new java.io.File(s"$runDir/commits").listFiles()
@@ -675,8 +674,7 @@ class StreamingSuite extends AnyFunSuite {
   test("stream_replay_exactly_once: crash fires mid-stream, restart completes the commit log, counts exact") {
     val out = EventTime.streamReplayExactlyOnce.build(s, TestSpark.Sf0001)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    val runDir = s"${sys.props("java.io.tmpdir")}/graft_scratch/stream_eo_run_" +
-      graft.ops.SessionArtifact.dirTag(TestSpark.Sf0001)
+    val runDir = Scratch.perCall(s, "stream_eo_run")
     val marks = new java.io.File(s"$runDir/commits").listFiles()
       .map(_.getName.toLong).sorted.toSeq
     // 12 source files at 4/trigger = 3 micro-batches; the planted crash

@@ -456,4 +456,19 @@ class UnitSuite extends AnyFunSuite {
     assert(LlmOps.lcsLen(arr("abc"), arr("xyz")) == 0)
     assert(LlmOps.lcsLen(Array.empty[String], arr("abc")) == 0)
   }
+
+  test("PlanSweep counts whole node names, not substrings") {
+    val plan = """AdaptiveSparkPlan isFinalPlan=false
+      |+- *(3) HashAggregate(keys=[k#1], functions=[count(1)])
+      |   +- Exchange hashpartitioning(k#1, 4), ENSURE_REQUIREMENTS, [plan_id=9]
+      |      +- *(2) BroadcastHashJoin [k#1], [k#2], Inner, BuildRight
+      |         :- ReusedExchange [k#1], Exchange hashpartitioning(k#1, 4), ENSURE_REQUIREMENTS, [plan_id=7]
+      |         +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false), [plan_id=8]
+      |            +- Generate explode(xs#3), [k#2], false, [x#4]""".stripMargin
+    Seq("Exchange", "ReusedExchange", "BroadcastExchange", "HashAggregate",
+        "BroadcastHashJoin", "Generate").foreach { n =>
+      assert(PlanSweep.nodeCount(plan, n) == 1, n)
+    }
+    assert(PlanSweep.nodeCount(plan, "Broadcast") == 0)
+  }
 }
