@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
@@ -77,14 +76,4 @@ case class ChunkSplit(child: Expression, size: Expression, stride: Expression)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren(0), size = newChildren(1), stride = newChildren(2))
-}
-
-object ChunkSplit {
-  /** `graft_chunk_split(tk, size, stride)` for `expr(...)` on this
-    * session (same registration pattern as the scalar kernels).
-    */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_chunk_split",
-      args => ChunkSplit(args(0), args(1), args(2)), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -96,15 +95,4 @@ case class CosineSim(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object CosineSim {
-  /** Make `graft_cosine(a, b)` available to `expr(...)` / SQL on this
-    * session. Registered imperatively so the library works on any caller
-    * session; a deployment can equivalently injectFunction through
-    * SparkSessionExtensions.
-    */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", args => CosineSim(args(0), args(1)), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -100,12 +99,4 @@ case class HyperplaneBands(children: Seq[Expression])
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(children = newChildren)
-}
-
-object HyperplaneBands {
-  /** Make `graft_hyperplane_bands(...)` available to `expr(...)` / SQL
-    * on this session (see CosineSim.register for the contract). */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hyperplane_bands", args => HyperplaneBands(args), "built-in")
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -136,9 +135,8 @@ case class NearestCells(left: Expression, right: Expression, n: Int)
 }
 
 object NearestCells {
-  /** The one arg-list → expression builder both registration paths
-    * (imperative register and GraftExtensions injection) share; `n`
-    * must be an int literal.
+  /** The arg-list → expression builder of the `graft_nearest_cells`
+    * catalog entry (GraftExtensions); `n` must be an int literal.
     */
   def builder(args: Seq[Expression]): NearestCells = {
     if (args.length != 3) throw new IllegalArgumentException(
@@ -150,9 +148,4 @@ object NearestCells {
     }
     NearestCells(args(0), args(1), n)
   }
-
-  /** Registers `graft_nearest_cells(v, cents, n)` on this session. */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nearest_cells", builder, "built-in")
 }

@@ -823,7 +823,6 @@ object LlmOps {
   /** Same pipeline over an arbitrary (doc_id, text, …) relation — the
     * curation pipeline op feeds it the post-exact-dedup survivor set. */
   private def nearPairsFrom(s: org.apache.spark.sql.SparkSession, docsRaw: DataFrame): DataFrame = {
-    graft.functions.SortedIntersectCount.register(s)
     val docs = docsRaw
       .select(col("doc_id"), toks.as("toks"))
       .filter(size(col("toks")) >= 5)
@@ -972,7 +971,6 @@ object LlmOps {
   val llmDedupContainment: Op = Op(
     "llm_dedup_containment",
     (s, dir) => {
-      graft.functions.SortedIntersectCount.register(s)
       // spreadDocs: unlike nearPairs' 5-shingle band explode, the
       // posting side below explodes the FULL shingle set — from the
       // single-file scan's one partition that whole generate would
@@ -1603,7 +1601,8 @@ object LlmOps {
     * itself) to m(u). Each round is two shuffles (a min-aggregate and
     * an edge re-emit) over an edge set that only SHRINKS toward the
     * star forest; edges re-symmetrize and checkpoint between rounds so
-    * the loop's plan stays flat.
+    * the loop's plan stays flat. Returns the bare checkpoint: starLabels
+    * renames it for the next round and releases it after that round.
     */
   private def starRound(e: DataFrame, large: Boolean): DataFrame = {
     val m = e.select(col("src"), col("dst"))
@@ -1625,10 +1624,6 @@ object LlmOps {
       .union(emitted.select(col("b").as("src"), col("a").as("dst")))
       .distinct()
       .localCheckpoint(true)
-      // fresh attribute ids: the next round unions/joins this frame
-      // with projections of ITSELF, and reused post-checkpoint ids can
-      // trip analyzer dedup (NoSuchElementException in AttributeMap)
-      .toDF("src", "dst")
   }
 
   /** SAME semantics as llm_dedup_cluster, 100 TB physical form — the
@@ -1649,14 +1644,21 @@ object LlmOps {
     * pair set — exposed for PropertySuite's long-path convergence test
     * (the topology where fixed-round min-label propagation fails). */
   private[graft] def starLabels(vp: DataFrame, rounds: Int): DataFrame = {
-    var e = vp.select(col("a_id").as("src"), col("b_id").as("dst"))
+    // fresh attribute ids: each round unions/joins its input with
+    // projections of ITSELF, and reused post-checkpoint ids can trip
+    // analyzer dedup (NoSuchElementException in AttributeMap)
+    def renamed(cp: DataFrame) = cp.toDF("src", "dst")
+    var cp = vp.select(col("a_id").as("src"), col("b_id").as("dst"))
       .union(vp.select(col("b_id").as("src"), col("a_id").as("dst")))
       .localCheckpoint(true)
-      .toDF("src", "dst")
-    for (_ <- 1 to rounds) {
-      e = starRound(e, large = true)
-      e = starRound(e, large = false)
+    for (_ <- 1 to rounds; large <- Seq(true, false)) {
+      val next = starRound(renamed(cp), large)
+      // release the un-renamed checkpoint (a rename's Project hides its
+      // LogicalRDD); the materialized `next` no longer reads it
+      releaseCheckpoint(cp)
+      cp = next
     }
+    val e = renamed(cp)
     // star forest: every node's component is its closed-neighborhood min
     e.select(col("src"), col("dst"))
       .union(e.select(col("src"), col("src").as("dst")))
@@ -1706,7 +1708,6 @@ object LlmOps {
   private val minhashPairsCache = new SessionArtifact[DataFrame]
   private def minhashPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = minhashPairsCache(s, dir) {
-      graft.functions.SortedIntersectCount.register(s)
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), toks.as("toks"))
         .filter(size(col("toks")) >= 5)
@@ -2181,7 +2182,6 @@ object LlmOps {
     * PropertySuite can assert band selectivity (never all-pairs, no
     * giant bucket) directly on the production subplan. */
   private[graft] def embedBandsOf(s: org.apache.spark.sql.SparkSession, tf: DataFrame): DataFrame = {
-    graft.functions.HyperplaneBands.register(s)
     val planes = s.range(1)
       .select(explode(expr(s"sequence(0, ${HpPlanes - 1})")).as("p"))
       .select(col("p"), expr(
@@ -2320,7 +2320,6 @@ object LlmOps {
   val llmSimsearchTopk: Op = Op(
     "llm_simsearch_topk",
     (s, dir) => {
-      graft.functions.CosineSim.register(s)
       val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding").as("v"))
       val probes = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("p_id"), col("v").as("pv"))
@@ -2425,7 +2424,6 @@ object LlmOps {
   val llmSimsearchLshDet: Op = Op(
     "llm_simsearch_lsh_det",
     (s, dir) => {
-      graft.functions.CosineSim.register(s)
       val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding").as("v"))
       // one broadcast row: 64 sign hyperplanes over the 64 dims,
       // signs[p][d] = 1 - 2·(md5 bit) — the llm_dedup_embed draw
@@ -2533,7 +2531,6 @@ object LlmOps {
   val llmSimsearchMmr: Op = Op(
     "llm_simsearch_mmr",
     (s, dir) => {
-      graft.functions.CosineSim.register(s)
       val e = ivfVecs(s, dir)
       val probes = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("p_id"), col("v").as("pv"))
@@ -2870,8 +2867,6 @@ object LlmOps {
   val llmIvfFit: Op = Op(
     "llm_ivf_fit",
     (s, dir) => {
-      graft.functions.SqDist.register(s)
-      graft.functions.NearestCells.register(s)
       val e = ivfVecs(s, dir)
       // 32 tiny rows feeding TWO consumers (the assignment's broadcast
       // and the output projection) — the shared per-session fit cache
@@ -2894,8 +2889,6 @@ object LlmOps {
   val llmSimsearchIvf: Op = Op(
     "llm_simsearch_ivf",
     (s, dir) => {
-      graft.functions.SqDist.register(s)
-      graft.functions.NearestCells.register(s)
       val e = ivfVecs(s, dir)
       val (cents, k) = ivfFit(s, dir)
       val centArr = ivfCentArr(cents)
@@ -2963,8 +2956,6 @@ object LlmOps {
   val llmEmbedOutliers: Op = Op(
     "llm_embed_outliers",
     (s, dir) => {
-      graft.functions.SqDist.register(s)
-      graft.functions.NearestCells.register(s)
       val e = ivfVecs(s, dir)
       val cents = ivfCents(s, dir)
       val scored = ivfAssign(e, ivfCentArr(cents))
@@ -3159,7 +3150,6 @@ object LlmOps {
   val llmSimsearchPq: Op = Op(
     "llm_simsearch_pq",
     (s, dir) => {
-      graft.functions.SqDist.register(s)
       val e = ivfVecs(s, dir)
       val js = pqJs(s)
       val (cb, codes) = pqFit(s, dir)
@@ -3232,8 +3222,6 @@ object LlmOps {
   val llmSimsearchIvfpq: Op = Op(
     "llm_simsearch_ivfpq",
     (s, dir) => {
-      graft.functions.SqDist.register(s)
-      graft.functions.NearestCells.register(s)
       val e = ivfVecs(s, dir)
       val js = pqJs(s)
       val (cents, ivfKFit) = ivfFit(s, dir)
@@ -3257,8 +3245,11 @@ object LlmOps {
       // fixture stand-in), then ONLY probed cells' codes ADC-score
       // r22 (guide §3.1): the codes ⋈ cellOf equi-join defaulted to
       // SortMergeJoin (derived sides, no stats) — a shuffled-hash join
-      // skips both sorts; the build side is per-partition cell-tag rows
-      // (corpus/partitions-bounded at any scale)
+      // skips both sorts. Precondition: the build side holds one
+      // cell-tag row per vector, held in memory per shuffle partition,
+      // so it stays bounded only while the shuffle partition count
+      // grows with the corpus; at a fixed count it grows linearly
+      // with N. (sink_model_artifact_search repeats this hint.)
       val adc = codes.join(cellOf.hint("SHUFFLE_HASH"), "vec_id")
         .join(broadcast(probeCells), "cell")
         .filter(col("vec_id") =!= col("p_id"))
@@ -3334,9 +3325,6 @@ object LlmOps {
   val llmDedupSemantic: Op = Op(
     "llm_dedup_semantic",
     (s, dir) => {
-      graft.functions.SqDist.register(s)
-      graft.functions.NearestCells.register(s)
-      graft.functions.CosineSim.register(s)
       val e = ivfVecs(s, dir)
       val planted = e.filter(col("vec_id") % 25 === 0)
         .select((col("vec_id") + 100000L).as("vec_id"),
@@ -3456,9 +3444,6 @@ object LlmOps {
   val llmDedupSemanticScale: Op = Op(
     "llm_dedup_semantic_scale",
     (s, dir) => {
-      graft.functions.SqDist.register(s)
-      graft.functions.NearestCells.register(s)
-      graft.functions.CosineSim.register(s)
       val (aug, cents) = semScaleFit(s, dir)
       val asg = aug.crossJoin(broadcast(ivfCentArr(cents)))
         .select(col("vec_id"), explode(nearestCells("v", 2)).as("cell"))
@@ -5477,11 +5462,6 @@ object LlmOps {
   private val modelStoreWritten = new SessionArtifact[String]
   private def modelStore(s: SparkSession, dir: String): String =
     modelStoreWritten(s, dir) {
-      // the fits assume their consumer op registered the native
-      // functions; the store may be the first fit consumer in a run
-      graft.functions.SqDist.register(s)
-      graft.functions.NearestCells.register(s)
-      graft.functions.SortedIntersectCount.register(s)
       val p = Scratch.shared(s, dir, "model_store")
       ivfCents(s, dir).write.mode("overwrite").parquet(s"$p/ivf_centroids")
       val (cb, codes) = pqFit(s, dir)
@@ -5516,8 +5496,6 @@ object LlmOps {
   val sinkModelArtifactSearch: Op = Op(
     "sink_model_artifact_search",
     (s, dir) => {
-      graft.functions.SqDist.register(s)
-      graft.functions.NearestCells.register(s)
       val p = modelStore(s, dir)
       val e = ivfVecs(s, dir)
       val js = pqJs(s)
@@ -5541,10 +5519,8 @@ object LlmOps {
         .select(col("p_id"), col("j"), col("cell").as("code"),
           round(sqdist(col("psub"), col("csub")), 8)
             .cast(DecimalType(20, 8)).as("pd"))
-      // r22 (guide §3.1): the codes ⋈ cellOf equi-join defaulted to
-      // SortMergeJoin (derived sides, no stats) — a shuffled-hash join
-      // skips both sorts; the build side is per-partition cell-tag rows
-      // (corpus/partitions-bounded at any scale)
+      // llm_simsearch_ivfpq's shuffled-hash join, under the same
+      // partition-count precondition (stated there)
       val adc = codes.join(cellOf.hint("SHUFFLE_HASH"), "vec_id")
         .join(broadcast(probeCells), "cell")
         .filter(col("vec_id") =!= col("p_id"))
@@ -5614,8 +5590,6 @@ object LlmOps {
   val sinkModelArtifactRefresh: Op = Op(
     "sink_model_artifact_refresh",
     (s, dir) => {
-      graft.functions.SqDist.register(s)
-      graft.functions.NearestCells.register(s)
       val p = Scratch.perCall(s, "model_refresh")
       // the protocol IS the graded subject: every build re-runs it
       Scratch.empty(p)
@@ -5753,7 +5727,6 @@ object LlmOps {
   val llmRetrievalMrr: Op = Op(
     "llm_retrieval_mrr",
     (s, dir) => {
-      graft.functions.CosineSim.register(s)
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label"), col("embedding").as("v"))
       val anchors = e.filter(col("vec_id") % 50 === 0)
@@ -5814,7 +5787,6 @@ object LlmOps {
   val llmHardNegatives: Op = Op(
     "llm_hard_negatives",
     (s, dir) => {
-      graft.functions.CosineSim.register(s)
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label"), col("embedding").as("v"))
       val anchors = e.filter(col("vec_id") % 50 === 0)
@@ -5980,9 +5952,11 @@ object LlmOps {
           col("avgdl"))
       val q = tf.filter(col("doc_id") % 100 === 0)
         .select(col("doc_id").as("q_id"), col("term"))
-      val scores = tf.join(broadcast(q), "term")
+      // q and dft grow with the corpus: no broadcast hint, the planner
+      // (AQE included) picks the join from their sizes
+      val scores = tf.join(q, "term")
         .filter(col("doc_id") =!= col("q_id"))
-        .join(broadcast(dft), "term")
+        .join(dft, "term")
         .select(col("q_id"), col("doc_id"),
           (col("idf") * (col("tf") * 2.2) /
             (col("tf") +
@@ -7762,14 +7736,8 @@ object LlmOps {
     * session the SessionArtifact cache is that persisted store.
     */
   private[graft] def prewarmArtifacts(s: SparkSession, dir: String): Unit = {
-    // the builds assume their consumer op registered the native
-    // functions first; prewarm is a new entry point, so register all
-    // of them up front (idempotent)
-    graft.functions.SortedIntersectCount.register(s)
-    graft.functions.SqDist.register(s)
-    graft.functions.NearestCells.register(s)
-    graft.functions.CosineSim.register(s)
-    graft.functions.HyperplaneBands.register(s)
+    // the fits run outside any Op.build, which installs the kernels
+    graft.functions.GraftExtensions.register(s)
     nearPairs(s, dir)
     minhashPairs(s, dir)
     embedTf(s, dir)

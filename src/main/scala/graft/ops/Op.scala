@@ -4,10 +4,18 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.GraftExtensions
+
 /** One graded operator: a Spark build function plus (optionally) the
   * equivalent ANSI SQL the driver runs through DuckDB on the same tables.
   * Declaring both in one value makes query/oracle key drift impossible
   * (SURVEY.md §7.1).
+  *
+  * `build` first installs the `graft_*` kernel catalog
+  * (`GraftExtensions.register`) on the session it is given, then runs
+  * the op's own build function, so every caller gets a provisioned
+  * session. Precondition: the install covers that session only — a frame
+  * an op builds on `s.newSession()` resolves no `graft_*` function.
   */
 final case class Op(
     name: String,
@@ -15,6 +23,12 @@ final case class Op(
     oracle: Option[String])
 
 object Op {
+
+  def apply(
+      name: String,
+      build: (SparkSession, String) => DataFrame,
+      oracle: Option[String]): Op =
+    new Op(name, (s, dir) => { GraftExtensions.register(s); build(s, dir) }, oracle)
 
   /** Hash-match portability helpers (SURVEY.md §5.3). The driver compares
     * our parquet output against DuckDB byte-for-byte after sorting columns

@@ -4613,7 +4613,6 @@ object Relational {
   val sinkHilbertPrune: Op = Op(
     "sink_hilbert_prune",
     (s, dir) => {
-      graft.functions.HilbertIndex.register(s)
       val tmp = Scratch.perCall(s, "sink_hilbert")
       val bounds = Tables.orders(s, dir).agg(
         max(col("o_custkey")).as("max_ck"),

@@ -199,7 +199,6 @@ object Udafs {
   val udtfChunkLateral: Op = Op(
     "udtf_chunk_lateral",
     (s, dir) => {
-      graft.functions.ChunkSplit.register(s)
       Tables.documents(s, dir)
         .select(col("doc_id"), split(col("text"), " ").as("tk"))
         .filter(size(col("tk")) >= 1)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.CosineSim
+import graft.functions.GraftExtensions
 import graft.tables.Tables
 
 /** The native CosineSim expression must be bit-identical to the
@@ -17,7 +17,7 @@ class CosineSimSuite extends AnyFunSuite {
   private def bothFormulations(factoryMode: String): Seq[(Double, Double)] = {
     s.conf.set("spark.sql.codegen.factoryMode", factoryMode)
     try {
-      CosineSim.register(s)
+      GraftExtensions.register(s)
       val e = Tables.embeddings(s, TestSpark.Sf0001)
         .select(col("vec_id"), col("embedding").as("v"))
       val probes = e.filter(col("vec_id") % 50 === 0)
@@ -52,7 +52,7 @@ class CosineSimSuite extends AnyFunSuite {
 
   test("degenerate inputs: zero vector and empty arrays yield 0.0") {
     import s.implicits._
-    CosineSim.register(s)
+    GraftExtensions.register(s)
     val df = Seq(
       (Array(0f, 0f), Array(1f, 2f)),
       (Array.empty[Float], Array.empty[Float]))
@@ -64,7 +64,7 @@ class CosineSimSuite extends AnyFunSuite {
   private def bothFormulationsDouble(factoryMode: String): Seq[(Double, Double)] = {
     s.conf.set("spark.sql.codegen.factoryMode", factoryMode)
     try {
-      CosineSim.register(s)
+      GraftExtensions.register(s)
       // double-typed vectors, including the llm_dedup_semantic planted
       // transform (x -> 0.9x + 0.01), exercised through the double branch
       val e = Tables.embeddings(s, TestSpark.Sf0001)
@@ -95,7 +95,7 @@ class CosineSimSuite extends AnyFunSuite {
 
   test("mixed float/double array inputs are rejected") {
     import s.implicits._
-    CosineSim.register(s)
+    GraftExtensions.register(s)
     val df = Seq((Array(1f, 2f), Array(1.0, 2.0))).toDF("a", "b")
     val err = intercept[Exception] {
       df.select(expr("graft_cosine(a, b)")).collect()

@@ -55,7 +55,7 @@ class HilbertIndexSuite extends AnyFunSuite {
   }
 
   test("codegen path agrees with eval on a coordinate sweep") {
-    graft.functions.HilbertIndex.register(s)
+    graft.functions.GraftExtensions.register(s)
     import s.implicits._
     val rnd = new scala.util.Random(11)
     val pts = Seq.tabulate(4096)(_ =>

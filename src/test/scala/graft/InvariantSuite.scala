@@ -114,7 +114,7 @@ class InvariantSuite extends AnyFunSuite {
   }
 
   test("ChunkSplit generator is row-equal to the composed sequence+slice chunking") {
-    graft.functions.ChunkSplit.register(s)
+    graft.functions.GraftExtensions.register(s)
     val viaGenerator = Tables.documents(s, sf)
       .select(col("doc_id"), split(col("text"), " ").as("tk"))
       .selectExpr("doc_id", "graft_chunk_split(tk, 64, 48) AS (chunk_id, chunk)")

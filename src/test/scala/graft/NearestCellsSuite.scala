@@ -24,8 +24,7 @@ class NearestCellsSuite extends AnyFunSuite {
   private def divergences(n: Int, factoryMode: String): Long = {
     s.conf.set("spark.sql.codegen.factoryMode", factoryMode)
     try {
-      graft.functions.SqDist.register(s)
-      graft.functions.NearestCells.register(s)
+      graft.functions.GraftExtensions.register(s)
       val e = Tables.embeddings(s, TestSpark.Sf0001)
         .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
       val cents = e.filter(col("vec_id") % 16 === 0)
@@ -48,7 +47,7 @@ class NearestCellsSuite extends AnyFunSuite {
 
   test("tie at equal distance ranks by cell id; n beyond cell count ranks all") {
     import s.implicits._
-    graft.functions.NearestCells.register(s)
+    graft.functions.GraftExtensions.register(s)
     // two cells at IDENTICAL distance 1.0 from the probe → cell id order
     val df = Seq((Seq(0.0, 0.0), Seq((7L, Seq(1.0, 0.0)), (3L, Seq(0.0, 1.0)))))
       .toDF("v", "cents")

@@ -114,6 +114,8 @@ class PropertySuite extends AnyFunSuite {
     // size bounds the quadratic blowup of the band self-join at scale)
     val docs = graft.tables.Tables.documents(s, sf)
     val n = docs.count()
+    // a fit helper, not an op: install the kernels Op.build would
+    graft.functions.GraftExtensions.register(s)
     val bands = LlmOps.embedBandsFor(s, sf)
     val cand = bands.as("a")
       .join(bands.as("b"),

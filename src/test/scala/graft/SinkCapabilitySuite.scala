@@ -503,4 +503,19 @@ class SinkCapabilitySuite extends AnyFunSuite {
       .orderBy("status", "shard").collect().toSeq
     assert(again == graded)
   }
+
+  test("sink_column_stats_history: every status in the MOR log is one ASCII char") {
+    // the op folds min/max(status) through ascii()/char(), which keeps
+    // only a string's first character (mod 256): a longer or non-ASCII
+    // status would corrupt min_str/max_str without any error
+    SparkEntry.queries("sink_column_stats_history")(s, TestSpark.Sf0001).collect()
+    val log = Scratch.shared(s, TestSpark.Sf0001, "mor_log")
+    val statuses = s.read.parquet(s"$log/base").select("status")
+      .union(s.read.parquet(s"$log/delta").select("status"))
+      .distinct().collect().map(_.getString(0)).toSet
+    val fixture = Tables.orders(s, TestSpark.Sf0001).select("o_orderstatus")
+      .distinct().collect().map(_.getString(0)).toSet
+    assert(statuses == fixture + "N", s"log statuses $statuses")
+    statuses.foreach(st => assert(st.length == 1 && st.head < 128, s"status '$st'"))
+  }
 }

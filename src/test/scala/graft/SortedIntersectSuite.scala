@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.SortedIntersectCount
+import graft.functions.GraftExtensions
 
 /** The native SortedIntersectCount must equal size(array_intersect) on
   * sorted distinct arrays (its contract), in BOTH the interpreted and
@@ -17,7 +17,7 @@ class SortedIntersectSuite extends AnyFunSuite {
   private def compare(pairs: Seq[(Seq[String], Seq[String])], factoryMode: String): Unit = {
     s.conf.set("spark.sql.codegen.factoryMode", factoryMode)
     try {
-      SortedIntersectCount.register(s)
+      GraftExtensions.register(s)
       import s.implicits._
       // sortedness established by array_sort itself — the literal contract
       val rows = pairs.toDF("a0", "b0")
@@ -61,7 +61,7 @@ class SortedIntersectSuite extends AnyFunSuite {
     for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
       s.conf.set("spark.sql.codegen.factoryMode", mode)
       try {
-        SortedIntersectCount.register(s)
+        GraftExtensions.register(s)
         val rows = s.sql(
           """SELECT
             |  graft_sorted_intersect_count(array('a', 'b', NULL), array('a', NULL, 'c')) AS c1,
