@@ -6,20 +6,16 @@ import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions entry point: injects the `GraftExtensions`
-  * catalog (every graft native function) at session-build time, plus the
-  * `SelfDistanceFold` optimizer rule. `Op.build` installs the same
-  * catalog on the session it is given, so a session built without
-  * extensions resolves the same Expression classes.
+  * catalog (every graft native function) at session-build time.
+  * `Op.build` installs the same catalog on the session it is given, so a
+  * session built without extensions resolves the same Expression classes.
   *
   * Use: `SparkSession.builder().withExtensions(new GraftExtensions)` or
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
+  override def apply(ext: SparkSessionExtensions): Unit =
     GraftExtensions.catalog.foreach(ext.injectFunction)
-    // algebraic identities over the native functions (see SelfDistanceFold)
-    ext.injectOptimizerRule(_ => SelfDistanceFold)
-  }
 }
 
 object GraftExtensions {

@@ -566,7 +566,7 @@ object Aggregates {
     * bounded groups (3 statuses × bounded distinct prices at fixture
     * sf) but memory-unbounded for huge groups. At 100 TB swap to
     * `approx_percentile` (t-digest sketch, mergeable map-side) or the
-    * distributed-rank formulation win_ntile_pct_scale demonstrates.
+    * distributed rank of GlobalRank (ops/GlobalRank.scala).
     */
   val aggPercentileExact: Op = Op(
     "agg_percentile_exact",

@@ -4024,26 +4024,11 @@ WITH hourly AS (
       GROUP BY f.event_type, f.n, f.q1, f.q3 ORDER BY f.event_type
     """.stripMargin.trim))
 
-  /** Heuristic BOT/AUTOMATION scoring per user — the abuse-filter
-    * reading of the inter-arrival machinery: automated traffic shows
-    * LOW gap variability (cv = sd/mean of inter-event gaps — a cron
-    * job's cv → 0, humans ≈ 1 for Poisson-like arrivals), high volume,
-    * and narrow type diversity; the score ln(n)/(cv+0.1)/n_types folds
-    * those three deterministically and the top DECILE is flagged (a
-    * relative threshold always fires — the "detector graded on zeros"
-    * rule; on this i.i.d. fixture absolute rules would flag nobody).
-    * Gap moments fold EXACTLY: gaps are integer µs, Σg is a long
-    * telescoping sum, Σg² rides DECIMAL(19,0)² → DECIMAL(38,0) (a long
-    * would overflow at ~670 events/user), so cv is one deterministic
-    * double expression on exact sums. The decile window is global like
-    * win_ntile_pct's — at user cardinality beyond one partition, swap
-    * in win_ntile_pct_scale's two-phase distributed rank machinery.
-    */
   /** The per-user scored frame (user_id, n, n_types, mean_gap_s, cv,
-    * bot_score) shared by events_bot_score and its decile-machinery
-    * scale twin — one definition so the score semantics cannot fork.
+    * bot_score) of events_bot_score. WindowScaleSuite's single-window
+    * reference scores through it too, so the score cannot fork.
     */
-  private def botScored(s: org.apache.spark.sql.SparkSession,
+  private[graft] def botScored(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
     val g = Tables.events(s, dir)
       .select(col("user_id"), col("event_type"), col("event_id"),
@@ -4069,13 +4054,31 @@ WITH hourly AS (
         .as("bot_score"))
   }
 
+  /** Heuristic BOT/AUTOMATION scoring per user — the abuse-filter
+    * reading of the inter-arrival machinery: automated traffic shows
+    * LOW gap variability (cv = sd/mean of inter-event gaps — a cron
+    * job's cv → 0, humans ≈ 1 for Poisson-like arrivals), high volume,
+    * and narrow type diversity; the score ln(n)/(cv+0.1)/n_types folds
+    * those three deterministically and the top DECILE is flagged (a
+    * relative threshold always fires — the "detector graded on zeros"
+    * rule; on this i.i.d. fixture absolute rules would flag nobody).
+    * Gap moments fold EXACTLY: gaps are integer µs, Σg is a long
+    * telescoping sum, Σg² rides DECIMAL(19,0)² → DECIMAL(38,0) (a long
+    * would overflow at ~670 events/user), so cv is one deterministic
+    * double expression on exact sums. The decile is GlobalRank's
+    * distributed row number under (bot_score desc, user_id) with the
+    * ntile(10) closed form, so the rank never funnels through one
+    * partition.
+    */
   val eventsBotScore: Op = Op(
     "events_bot_score",
     (s, dir) =>
-      botScored(s, dir)
-        .withColumn("decile", ntile(10).over(
-          Window.orderBy(col("bot_score").desc, col("user_id"))))
+      GlobalRank.rank(botScored(s, dir), Nil,
+          Seq(col("bot_score").desc, col("user_id")), n = "nn")
+        .withColumn("decile", GlobalRank.ntile(10, n = "nn"))
         .withColumn("is_bot", (col("decile") === 1).cast(IntegerType))
+        .select("user_id", "n", "n_types", "mean_gap_s", "cv", "bot_score",
+          "decile", "is_bot")
         .orderBy("user_id"),
     Some("""
       WITH g AS (
@@ -4108,47 +4111,7 @@ WITH hourly AS (
       FROM scored ORDER BY user_id
     """.stripMargin.trim))
 
-  /** SCALE TWIN of events_bot_score's decile — the global ntile window
-    * replaced by the win_ntile_pct_scale machinery (range-repartition
-    * on the sort key → per-partition local row_number → tiny
-    * offsets/summary broadcast → ntile(10) closed form), so the rank
-    * never funnels through one partition; at billions of users only
-    * the 8-row partition summary is ever single-task. Shares
-    * botScored() with the spec form and grades against the SAME
-    * oracle, so the physical rewrite is proven bit-equivalent every
-    * round (the house _scale-twin contract).
-    */
-  val eventsBotScoreScale: Op = Op(
-    "events_bot_score_scale",
-    (s, dir) => {
-      val parted = botScored(s, dir)
-        .repartitionByRange(8, col("bot_score").desc, col("user_id"))
-        .withColumn("pid", spark_partition_id())
-      val local = parted.withColumn("lrn", row_number().over(
-        Window.partitionBy("pid")
-          .orderBy(col("bot_score").desc, col("user_id"))).cast(LongType))
-      val offsets = local.groupBy("pid").agg(count(lit(1)).as("cnt"))
-        .withColumn("off", coalesce(sum("cnt").over(
-          Window.orderBy("pid")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("nn", sum("cnt").over(Window.partitionBy()))
-        .select("pid", "off", "nn")
-      local.join(broadcast(offsets), "pid")
-        .withColumn("rn", col("lrn") + col("off"))
-        // ntile(10) closed form: first nn%10 buckets hold nn div 10 + 1
-        // rows, the rest nn div 10 (the win_ntile_pct_scale expression)
-        .withColumn("decile", expr("""cast(case
-            when rn <= (nn % 10) * (nn div 10 + 1)
-            then (rn - 1) div (nn div 10 + 1)
-            else (nn % 10) + (rn - 1 - (nn % 10) * (nn div 10 + 1))
-              div greatest(nn div 10, 1)
-          end + 1 as int)"""))
-        .withColumn("is_bot", (col("decile") === 1).cast(IntegerType))
-        .select("user_id", "n", "n_types", "mean_gap_s", "cv", "bot_score",
-          "decile", "is_bot")
-        .orderBy("user_id")
-    },
-    eventsBotScore.oracle)
+  val eventsBotScoreScale: Op = eventsBotScore.copy(name = "events_bot_score_scale")
 
   /** FUNNEL CONVERSION LATENCY — the time-to-convert read-out on top of
     * events_funnel's who-converts: per user, first view → first

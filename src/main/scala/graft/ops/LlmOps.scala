@@ -4719,18 +4719,15 @@ object LlmOps {
     """.stripMargin.trim))
 
   /** llm_mix_sources' SCALE FORMULATION — the per-source md5-order rank
-    * via the distributed-rank machinery (win_ntile_pct_scale's shape,
-    * keyed by source instead of status): range-partition by
-    * (source, h, doc_id), row_number locally per (partition, source),
-    * add broadcast per-(partition, source) offsets. The spec form's
-    * per-source window is a single task per source — a skew ceiling
-    * when one source holds billions of docs; here every partition key
-    * grows with the cluster. Rank depends only on the total order, so
-    * the result is bit-identical (equivalence pinned in
-    * WindowScaleSuite; SAME oracle as llm_mix_sources). At true 100 TB
-    * the quota also flips from rank to sampling RATE (two-phase:
-    * count per source, then hash-threshold) — that form needs no rank
-    * at all; this twin grades the exact-quota semantics at scale.
+    * is GlobalRank's distributed row number, grouped by source. The spec
+    * form's per-source window is a single task per source — a skew
+    * ceiling when one source holds billions of docs. Rank depends only
+    * on the total order, so the result is bit-identical (equivalence
+    * pinned in WindowScaleSuite; SAME oracle as llm_mix_sources). At
+    * true 100 TB the quota also flips from rank to sampling RATE
+    * (two-phase: count per source, then hash-threshold) — that form
+    * needs no rank at all; this twin grades the exact-quota semantics
+    * at scale.
     */
   val llmMixSourcesScale: Op = Op(
     "llm_mix_sources_scale",
@@ -4745,20 +4742,7 @@ object LlmOps {
           when(srcNum < 5, "high").when(srcNum < 10, "mid").otherwise("low"))
         .withColumn("h", expr(
           "cast(conv(substring(md5(cast(doc_id as string)), 1, 7), 16, 10) as bigint)"))
-      val parted = docs
-        .repartitionByRange(8, col("source"), col("h"), col("doc_id"))
-        .withColumn("pid", spark_partition_id())
-        .localCheckpoint(true)
-      val local = parted.withColumn("lrn", row_number().over(
-        Window.partitionBy("pid", "source").orderBy(col("h"), col("doc_id")))
-        .cast(LongType))
-      val wOff = Window.partitionBy("source").orderBy("pid")
-      val offsets = parted.groupBy("pid", "source").agg(count(lit(1)).as("cnt"))
-        .withColumn("off", coalesce(
-          sum("cnt").over(wOff.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("pid", "source", "off")
-      local.join(broadcast(offsets), Seq("pid", "source"))
-        .withColumn("rn", col("lrn") + col("off"))
+      GlobalRank.rank(docs, Seq("source"), Seq(col("h"), col("doc_id")))
         .join(broadcast(tiers), "tier")
         .filter(col("rn") <= col("weight") * 5)
         .select(col("source"), col("tier"), col("weight"), col("rn"), col("doc_id"))

@@ -74,26 +74,5 @@ class ExtensionsSuite extends AnyFunSuite {
     assert(chunks.map(r =>
       r.getLong(0) -> r.getSeq[String](1).mkString("")).toSeq ==
       Seq(0L -> "abc", 1L -> "cde", 2L -> "e"))
-
-    // the injected optimizer rule folds graft_sqdist(x, x) to a
-    // null-preserving 0.0 — assert both the REWRITE (no sqdist left in
-    // the optimized plan) and the SEMANTICS (0.0 on a value, null on a
-    // null array)
-    // build from spark.range, NOT a local Seq — local relations get
-    // whole-plan constant-folded (ConvertToLocalRelation) and would
-    // make this assertion pass without the rule ever firing
-    def selfDist = s.range(2)
-      .selectExpr("IF(id = 0, array(cast(id as double), 2.5), NULL) AS v")
-      .selectExpr("graft_sqdist(v, v) AS d")
-    assert(!selfDist.queryExecution.optimizedPlan.toString.contains("graft_sqdist"),
-      s"self-distance not folded:\n${selfDist.queryExecution.optimizedPlan}")
-    val got = selfDist.orderBy("d").collect() // nulls first under asc
-      .map(r => if (r.isNullAt(0)) null else r.getDouble(0))
-    assert(got.toSeq == Seq(null, 0.0))
-    // the guard conf disables the fold (NaN-carrying corpora)
-    s.conf.set("spark.graft.sqdist.selfFoldNaNSafe", "false")
-    try
-      assert(selfDist.queryExecution.optimizedPlan.toString.contains("graft_sqdist"))
-    finally s.conf.set("spark.graft.sqdist.selfFoldNaNSafe", "true")
   }
 }

@@ -177,24 +177,81 @@ class PlanSuite extends AnyFunSuite {
       "salted join regressed to a quadratic probe")
   }
 
+  /** The formatted plans of every SQL execution a build runs before it
+    * returns: the eager `localCheckpoint`s, whose range exchange is cut
+    * out of the plan that reads them. The status store fills from the
+    * listener bus, so a marker query run after the build bounds the wait.
+    */
+  private def plansRunWhileBuilding(name: String): (DataFrame, String) = {
+    val store = spark.sharedState.statusStore
+    val before = store.executionsList().map(_.executionId).maxOption.getOrElse(-1L)
+    val df = SparkEntry.queries(name)(spark, sf)
+    val marker = s"plan-marker-${java.util.UUID.randomUUID()}"
+    spark.sparkContext.setJobDescription(marker)
+    try spark.range(1).collect() finally spark.sparkContext.setJobDescription(null)
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (!store.executionsList().exists(_.description == marker)) {
+      assert(System.nanoTime() < deadline, s"$name: marker execution never reached the status store")
+      Thread.sleep(20)
+    }
+    val ran = store.executionsList()
+      .filter(e => e.executionId > before && e.description != marker)
+    (df, ran.map(_.physicalPlanDescription).mkString("\n"))
+  }
+
+  // each name GlobalRank serves → the order keys its range partitions
+  // must cover; the win_range_frame pair keys every window by
+  // (status, price bucket) instead and has no global rank
+  private val rangeKeys: Map[String, Seq[String]] = Seq(
+    "win_ntile_pct" -> Seq("o_totalprice"), "win_pareto" -> Seq("rev"),
+    "win_rfm_segment" -> Seq("recency_days", "frequency", "monetary"),
+    "win_weighted_median" -> Seq("price"), "events_bot_score" -> Seq("bot_score"))
+    .flatMap { case (n, k) => Seq(n -> k, s"${n}_scale" -> k) }.toMap +
+    ("llm_mix_sources_scale" -> Seq("h"))
+
+  private def assertGlobalRankPlan(name: String): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    def unwrap(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
+      case other => other
+    }
+    val (df, built) = plansRunWhileBuilding(name)
+    val p = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted")) + built
+    rangeKeys.getOrElse(name, Nil).foreach { key =>
+      // an explicit repartitionByRange over the order key replaces the
+      // single-task global sort of a window with no partition key
+      assert(p.contains("REPARTITION_BY_NUM"), s"$name: explicit range repartition missing:\n$p")
+      assert(s"rangepartitioning\\([^)]*$key".r.findFirstIn(p).isDefined,
+        s"$name: range partition is not over the order key $key")
+    }
+    // a window with no partition key sorts its whole input in one
+    // task; only GlobalRank's per-(pid) offsets summary may do that
+    val global = unwrap(df.queryExecution.executedPlan).collect {
+      case w: WindowExec if w.partitionSpec.isEmpty && w.orderSpec.exists(_.child match {
+          case a: AttributeReference => a.name != "pid"
+          case _ => true
+        }) => w.orderSpec
+    }
+    assert(global.isEmpty, s"$name: unpartitioned window ordered by $global")
+  }
+
   test("win_ntile_pct_scale range-partitions for the distributed global rank") {
-    val p = plan("win_ntile_pct_scale")
-    // the scale formulation's whole point: an explicit repartitionByRange
-    // (REPARTITION_BY_NUM rangepartitioning over the order key) replaces
-    // the single-task global sort of the spec form
-    assert(p.contains("REPARTITION_BY_NUM"), s"explicit range repartition missing:\n$p")
-    assert("rangepartitioning\\([^)]*o_totalprice".r.findFirstIn(p).isDefined,
-      "range partition is not over the ranking order key")
+    assertGlobalRankPlan("win_ntile_pct_scale")
   }
 
   test("events_bot_score_scale range-partitions for the distributed decile") {
-    val p = plan("events_bot_score_scale")
-    // the scale twin's whole point: an explicit repartitionByRange on
-    // the decile sort key replaces the spec form's single-task global
-    // ntile window
-    assert(p.contains("REPARTITION_BY_NUM"), s"explicit range repartition missing:\n$p")
-    assert("rangepartitioning\\([^)]*bot_score".r.findFirstIn(p).isDefined,
-      "range partition is not over the decile sort key")
+    assertGlobalRankPlan("events_bot_score_scale")
+  }
+
+  test("global ranks range-partition and no window sorts a frame in one partition") {
+    val own = Set("win_ntile_pct_scale", "events_bot_score_scale")
+    val names = rangeKeys.keys.toSeq.sorted.filterNot(own) ++
+      Seq("win_range_frame", "win_range_frame_scale")
+    names.foreach(assertGlobalRankPlan)
   }
 
   test("sink_partitioned_prune answers its lang filter from directory pruning") {

@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # The full end-of-round gate, one command (see .claude/skills/verify/SKILL.md):
 #   compile -> ScalaTest -> Verify+DuckDB oracle at sf0.01 AND sf0.001
-#   -> partition-invariance probe (CPUS=1 vs 4, row-exact) -> Bench sf0.1.
+#   -> partition-invariance probe (CPUS=1 vs 4, row-exact)
+#   -> one untraced perfbench run per workload -> Bench sf0.1.
 # Exits nonzero on the first failure. ~8 min on this machine.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -39,8 +40,13 @@ for n in names:
 print(f"{len(names)} queries partition-invariant")
 EOF
 
+for w in analytics_mix ingest_mix; do
+  echo "== perfbench $w (untraced) =="
+  python3 perfbench/run.py --workload "$w" --seed 1 --seconds 20 --trace 0
+done
+
 echo "== bench sf0.1 =="
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS="$(nproc)" \
   sbt -batch "runMain graft.Bench" 2>&1 | grep -F '"metric"'
 
 echo "GATE GREEN"
