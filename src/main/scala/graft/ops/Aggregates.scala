@@ -45,7 +45,6 @@ object Aggregates {
           (sumMoney(col("qty")) / count(lit(1))).as("avg_qty"),
           (sumMoney(col("price")) / count(lit(1))).as("avg_price"),
           count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
     },
     Some("""
       SELECT l_returnflag, l_linestatus,
@@ -60,7 +59,8 @@ object Aggregates {
       WHERE l_shipdate <= TIMESTAMP '2000-12-01 00:00:00'
       GROUP BY l_returnflag, l_linestatus
       ORDER BY l_returnflag, l_linestatus
-    """.stripMargin.trim))
+    """.stripMargin.trim),
+    boundedOrder = Seq("l_returnflag", "l_linestatus"))
 
   /** Conditional aggregation — the SQL FILTER clause, expressed in the
     * DataFrame API as `agg(f(when(cond, x)))`: aggregates ignore nulls,

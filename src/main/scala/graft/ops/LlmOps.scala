@@ -5483,14 +5483,14 @@ object LlmOps {
       val p = modelStore(s, dir)
       val e = ivfVecs(s, dir)
       val js = pqJs(s)
-      val storedCents = s.read.parquet(s"$p/ivf_centroids")
+      val storedCents = Tables.parquet(s, s"$p/ivf_centroids")
       // serving derives nprobe from the ARTIFACT's own cell count — the
       // store is self-describing, no fit-time scalar needs persisting
       val kStored = storedCents.count().toInt
       val centArr = ivfCentArr(storedCents)
       val cellOf = ivfAssign(e, centArr).select(col("vec_id"), col("cell"))
-      val cb = s.read.parquet(s"$p/pq_codebook")
-      val codes = s.read.parquet(s"$p/pq_codes")
+      val cb = Tables.parquet(s, s"$p/pq_codebook")
+      val codes = Tables.parquet(s, s"$p/pq_codes")
       val probes = e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("p_id"), col("v").as("pv"))
       val probeCells = probes.crossJoin(broadcast(centArr))
@@ -5633,10 +5633,10 @@ object LlmOps {
     "sink_model_artifact_encode",
     (s, dir) => {
       val p = modelStore(s, dir)
-      val bpe = s.read.parquet(s"$p/bpe_vocab")
+      val bpe = Tables.parquet(s, s"$p/bpe_vocab")
         .select(col("w").as("cw"),
           size(split(trim(col("seq")), " ")).as("bpe_tok"))
-      val uni = s.read.parquet(s"$p/unigram_model")
+      val uni = Tables.parquet(s, s"$p/unigram_model")
         .select(col("w").as("cw"),
           size(split(trim(col("path")), " ")).as("uni_tok"))
       val bppw = col("sb").cast(DoubleType) / col("n_words")
@@ -5687,7 +5687,7 @@ object LlmOps {
     "sink_model_artifact_merges",
     (s, dir) => {
       val p = modelStore(s, dir)
-      s.read.parquet(s"$p/bpe_merges").orderBy("merge_round")
+      Tables.parquet(s, s"$p/bpe_merges").orderBy("merge_round")
     },
     llmVocabMerges.oracle)
 

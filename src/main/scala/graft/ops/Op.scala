@@ -16,19 +16,36 @@ import graft.functions.GraftExtensions
   * the op's own build function, so every caller gets a provisioned
   * session. Precondition: the install covers that session only — a frame
   * an op builds on `s.newSession()` resolves no `graft_*` function.
+  *
+  * `boundedOrder` holds the total-order keys of a BOUNDED result, one
+  * whose row count a dimension fixes (flags, nations, languages), never
+  * the corpus. `build` then ends the op's frame with
+  * `coalesce(1).sortWithinPartitions(keys)`: the last stage reads only
+  * partial aggregates or a small file, so one task sorts it, with no
+  * range-sample job and no range exchange. Empty (the default) means the
+  * op's own build ends in its total `orderBy`, as every result that grows
+  * with the corpus must.
   */
 final case class Op(
     name: String,
     build: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: Option[String],
+    boundedOrder: Seq[String])
 
 object Op {
 
   def apply(
       name: String,
       build: (SparkSession, String) => DataFrame,
-      oracle: Option[String]): Op =
-    new Op(name, (s, dir) => { GraftExtensions.register(s); build(s, dir) }, oracle)
+      oracle: Option[String],
+      boundedOrder: Seq[String] = Nil): Op = {
+    val keys = boundedOrder.map(col)
+    new Op(name, (s, dir) => {
+      GraftExtensions.register(s)
+      val df = build(s, dir)
+      if (keys.isEmpty) df else df.coalesce(1).sortWithinPartitions(keys: _*)
+    }, oracle, boundedOrder)
+  }
 
   /** Hash-match portability helpers (SURVEY.md §5.3). The driver compares
     * our parquet output against DuckDB byte-for-byte after sorting columns

@@ -140,6 +140,16 @@ object Relational {
       p
     }
 
+  /** The MOR log as one frame: the base snapshot as seq-0 upserts,
+    * followed by the delta batches. */
+  private def morLogRows(s: SparkSession, dir: String): DataFrame = {
+    val p = morLog(s, dir)
+    Tables.parquet(s, s"$p/base")
+      .select(col("o_orderkey"), col("status"), col("price"),
+        lit(0L).as("seq"), lit("U").as("op"))
+      .unionByName(Tables.parquet(s, s"$p/delta"))
+  }
+
   /** The closed form of the fully-applied log, shared verbatim by the
     * sink_merge_on_read and sink_compact_rewrite oracles (one string —
     * the stride semantics cannot fork per oracle).
@@ -158,12 +168,7 @@ object Relational {
   val sinkMergeOnRead: Op = Op(
     "sink_merge_on_read",
     (s, dir) => {
-      val tmp = morLog(s, dir)
-      val base = s.read.parquet(s"$tmp/base")
-        .select(col("o_orderkey"), col("status"), col("price"),
-          lit(0L).as("seq"), lit("U").as("op"))
-      val resolved = foldLatest(
-        base.unionByName(s.read.parquet(s"$tmp/delta")), "o_orderkey")
+      val resolved = foldLatest(morLogRows(s, dir), "o_orderkey")
       resolved.groupBy("status")
         .agg(count(lit(1)).as("n"),
           sum(dec2(col("price"))).cast(DoubleType).as("total_price"),
@@ -203,11 +208,7 @@ object Relational {
   val sinkTimeTravel: Op = Op(
     "sink_time_travel",
     (s, dir) => {
-      val tmp = morLog(s, dir)
-      val log = s.read.parquet(s"$tmp/base")
-        .select(col("o_orderkey"), col("status"), col("price"),
-          lit(0L).as("seq"), lit("U").as("op"))
-        .unionByName(s.read.parquet(s"$tmp/delta"))
+      val log = morLogRows(s, dir)
       val versions = s.range(0, 3).select(col("id").as("version"))
       val asOf = foldLatest(
         log.join(broadcast(versions), col("seq") <= col("version")),
@@ -269,15 +270,10 @@ object Relational {
   val sinkCompactRewrite: Op = Op(
     "sink_compact_rewrite",
     (s, dir) => {
-      val log = morLog(s, dir)
       // the compacted output stays op-PRIVATE scratch (only the input
       // log is shared): compaction owns its rewrite target
       val tmp = Scratch.perCall(s, "sink_compact")
-      val folded = foldLatest(
-        s.read.parquet(s"$log/base")
-          .select(col("o_orderkey"), col("status"), col("price"),
-            lit(0L).as("seq"), lit("U").as("op"))
-          .unionByName(s.read.parquet(s"$log/delta")), "o_orderkey")
+      val folded = foldLatest(morLogRows(s, dir), "o_orderkey")
         .select("o_orderkey", "status", "price")
       folded.write.mode("overwrite").parquet(s"$tmp/compacted")
       s.read.parquet(s"$tmp/compacted")
@@ -335,13 +331,8 @@ object Relational {
   val sinkManifestRewrite: Op = Op(
     "sink_manifest_rewrite",
     (s, dir) => {
-      val log = morLog(s, dir)
       val tmp = Scratch.perCall(s, "sink_manifest_rewrite")
-      val folded = foldLatest(
-        s.read.parquet(s"$log/base")
-          .select(col("o_orderkey"), col("status"), col("price"),
-            lit(0L).as("seq"), lit("U").as("op"))
-          .unionByName(s.read.parquet(s"$log/delta")), "o_orderkey")
+      val folded = foldLatest(morLogRows(s, dir), "o_orderkey")
         .select("o_orderkey", "status", "price")
       // W from the BASE table's key span (broadcast 1-row, in-plan-N):
       // shards 0..7 are contiguous key ranges, 8 catches the +20M
@@ -449,11 +440,7 @@ object Relational {
     * two ops prove each other instead of drifting).
     */
   private def changeSet(s: SparkSession, dir: String): DataFrame = {
-    val log = morLog(s, dir)
-    val all = s.read.parquet(s"$log/base")
-      .select(col("o_orderkey"), col("status"), col("price"),
-        lit(0L).as("seq"), lit("U").as("op"))
-      .unionByName(s.read.parquet(s"$log/delta"))
+    val all = morLogRows(s, dir)
     def snap(ver: Int): DataFrame =
       foldLatest(all.filter(col("seq") <= ver), "o_orderkey")
         .select(col("o_orderkey"), col("status"), col("price"))
@@ -528,7 +515,7 @@ object Relational {
       // the persisted MV total stays DECIMAL(18,2) end-to-end (round-14
       // ADVICE): a DoubleType round-trip is exact only under 2^53 cents,
       // quietly undercutting the op's own exact-decimal rationale
-      s.read.parquet(s"$log/base")
+      Tables.parquet(s, s"$log/base")
         .groupBy("status")
         .agg(count(lit(1)).as("n"),
           sum(dec2(col("price"))).cast(DecimalType(18, 2)).as("total"))
@@ -550,10 +537,10 @@ object Relational {
     */
   private def mvMaintained(s: SparkSession, dir: String): DataFrame = {
     val p = mvDirs(s, dir)
-    val mv0 = s.read.parquet(s"$p/mv0")
+    val mv0 = Tables.parquet(s, s"$p/mv0")
       .select(col("status"), col("n").as("dn"),
         col("total").cast(DecimalType(18, 2)).as("dtotal"))
-    val ch = s.read.parquet(s"$p/changes")
+    val ch = Tables.parquet(s, s"$p/changes")
     val oldSide = ch.filter(col("change").isin("delete", "update"))
       .select(col("old_status").as("status"), lit(-1L).as("dn"),
         (-dec2(col("old_price"))).cast(DecimalType(18, 2)).as("dtotal"))
@@ -616,7 +603,7 @@ object Relational {
     // dim the MV groups by (then it selects whole MV rows losslessly)
     else if (statusFilter.nonEmpty && !mvDefDims.contains("status")) None
     else {
-      val mv0 = s.read.parquet(mvServing(s, dir))
+      val mv0 = Tables.parquet(s, mvServing(s, dir))
       val mv = if (statusFilter.isEmpty) mv0
         else mv0.filter(col("status").isin(statusFilter: _*))
       val g = if (reqDims.isEmpty) mv.groupBy() else mv.groupBy(reqDims.map(col): _*)
@@ -718,10 +705,10 @@ object Relational {
     val s2 = EventTime.replaySession(s)
     val rec = (seqC: Column, opC: Column) => struct(
       seqC.as("seq"), opC.as("op"), col("status"), col("price"))
-    var state = s2.read.parquet(s"$log/base")
+    var state = Tables.parquet(s2, s"$log/base")
       .select(col("o_orderkey"), rec(lit(0L), lit("U")).as("rec"))
       .localCheckpoint(true)
-    val q = s2.readStream.schema(s2.read.parquet(s"$log/delta").schema)
+    val q = s2.readStream.schema(Tables.parquet(s2, s"$log/delta").schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$log/delta")
       .select(col("o_orderkey"), rec(col("seq"), col("op")).as("rec"))
@@ -828,8 +815,8 @@ object Relational {
       // hash compare pins the physical deletion, not just the fold
       val remaining = Seq("base", "delta", "compacted")
         .count(d => fs.exists(new org.apache.hadoop.fs.Path(s"$p/$d")))
-      val manifest = s.read.parquet(s"$p/manifest")
-      s.read.parquet(s"$p/compacted")
+      val manifest = Tables.parquet(s, s"$p/manifest")
+      Tables.parquet(s, s"$p/compacted")
         .groupBy("segment")
         .agg(count(lit(1)).as("n"),
           sum(dec2(col("bal"))).cast(DoubleType).as("total_bal"),
@@ -955,14 +942,14 @@ object Relational {
     "sink_table_history",
     (s, dir) => {
       val log = morLog(s, dir)
-      val deltas = s.read.parquet(s"$log/delta")
+      val deltas = Tables.parquet(s, s"$log/delta")
         .groupBy(col("seq").as("version"))
         .agg(sum(when(col("op") === "U", 1L).otherwise(0L)).as("n_updates"),
           sum(when(col("op") === "I", 1L).otherwise(0L)).as("n_inserts"),
           sum(when(col("op") === "D", 1L).otherwise(0L)).as("n_deletes"))
       val v0 = s.range(1).select(lit(0L).as("version"), lit(0L).as("n_updates"),
         lit(0L).as("n_inserts"), lit(0L).as("n_deletes"))
-      val baseN = s.read.parquet(s"$log/base").agg(count(lit(1)).as("base_rows"))
+      val baseN = Tables.parquet(s, s"$log/base").agg(count(lit(1)).as("base_rows"))
       v0.unionByName(deltas)
         .crossJoin(broadcast(baseN))
         .withColumn("rows_after", col("base_rows") +
@@ -1020,11 +1007,7 @@ object Relational {
   val sinkColumnStatsHistory: Op = Op(
     "sink_column_stats_history",
     (s, dir) => {
-      val tmp = morLog(s, dir)
-      val log = s.read.parquet(s"$tmp/base")
-        .select(col("o_orderkey"), col("status"), col("price"),
-          lit(0L).as("seq"), lit("U").as("op"))
-        .unionByName(s.read.parquet(s"$tmp/delta"))
+      val log = morLogRows(s, dir)
       val versions = s.range(0, 3).select(col("id").as("version"))
       val asOf = foldLatest(
         log.join(broadcast(versions), col("seq") <= col("version")),
@@ -1144,11 +1127,7 @@ object Relational {
   val sinkRowLineage: Op = Op(
     "sink_row_lineage",
     (s, dir) => {
-      val tmp = morLog(s, dir)
-      val log = s.read.parquet(s"$tmp/base")
-        .select(col("o_orderkey"), col("status"), col("price"),
-          lit(0L).as("seq"), lit("U").as("op"))
-        .unionByName(s.read.parquet(s"$tmp/delta"))
+      val log = morLogRows(s, dir)
       val lineage = log.filter(col("op") =!= "D")
         .groupBy("o_orderkey")
         .agg(min("seq").as("first_seq"), max("seq").as("last_seq"))
@@ -1252,7 +1231,7 @@ object Relational {
         s"orphan protocol drifted: $nBefore/$nOrphans/$nAfter")
       // the graded read is the NAIVE directory read — correct only
       // because the orphans are physically gone
-      s.read.parquet(s"$p/data")
+      Tables.parquet(s, s"$p/data")
         .groupBy(col("l_returnflag").as("returnflag"))
         .agg(count(lit(1)).as("n"),
           sum(dec2(col("l_extendedprice"))).cast(DoubleType).as("total_price"),
@@ -1341,7 +1320,7 @@ object Relational {
       val main = Tables.customer(s, dir)
         .select(col("c_custkey"), dec2(col("c_acctbal")).cast(DoubleType).as("bal"),
           col("c_mktsegment").as("segment"))
-        .unionByName(s.read.parquet(s"$p/delta_v1"))
+        .unionByName(Tables.parquet(s, s"$p/delta_v1"))
       main.groupBy("segment")
         .agg(count(lit(1)).as("n"),
           sum(dec2(col("bal"))).cast(DoubleType).as("total_bal"),
@@ -1447,7 +1426,7 @@ object Relational {
       val (p, overlap) = branchLog(s, dir)
       val markers = new java.io.File(s"$p/_commits").list().toSeq.sorted
       require(markers == Seq("v0", "v1", "v2"), s"marker log drifted: $markers")
-      val base = s.read.parquet(s"$p/base")
+      val base = Tables.parquet(s, s"$p/base")
         .select(col("p_partkey"), col("brand"), col("price"),
           lit(0L).as("seq"), lit("U").as("op"))
       def view(tag: String, parts: DataFrame*): DataFrame =
@@ -1457,9 +1436,9 @@ object Relational {
             sum(dec2(col("price"))).cast(DoubleType).as("total_price"),
             max("p_partkey").as("max_key"))
           .withColumn("view", lit(tag))
-      val d1 = s.read.parquet(s"$p/delta_v1")
-      val b1 = s.read.parquet(s"$p/branches/dev/b1")
-      val d2 = s.read.parquet(s"$p/delta_v2")
+      val d1 = Tables.parquet(s, s"$p/delta_v1")
+      val b1 = Tables.parquet(s, s"$p/branches/dev/b1")
+      val d2 = Tables.parquet(s, s"$p/delta_v2")
       view("branch", base, b1)
         .unionByName(view("main_post", base, d1, d2))
         .unionByName(view("main_pre", base, d1))
@@ -1506,10 +1485,10 @@ object Relational {
   private[graft] def expireLatestRead(s: SparkSession, dir: String): DataFrame = {
     val p = expiredLog(s, dir)
     foldLatest(
-      s.read.parquet(s"$p/checkpoint_v1")
+      Tables.parquet(s, s"$p/checkpoint_v1")
         .select(col("s_suppkey"), col("nation"), col("bal"),
           lit(1L).as("seq"), lit("U").as("op"))
-        .unionByName(s.read.parquet(s"$p/delta_v2")), "s_suppkey")
+        .unionByName(Tables.parquet(s, s"$p/delta_v2")), "s_suppkey")
       .select("s_suppkey", "nation", "bal")
   }
 
@@ -1523,7 +1502,7 @@ object Relational {
         .count(d => fs.exists(new org.apache.hadoop.fs.Path(s"$p/$d")))
       val markers = new java.io.File(s"$p/_commits").list().toSeq.sorted
       require(markers == Seq("v1", "v2"), s"retained markers drifted: $markers")
-      val v1 = s.read.parquet(s"$p/checkpoint_v1").withColumn("version", lit(1L))
+      val v1 = Tables.parquet(s, s"$p/checkpoint_v1").withColumn("version", lit(1L))
       val v2 = expireLatestRead(s, dir).withColumn("version", lit(2L))
       v1.unionByName(v2)
         .groupBy(col("version"), (col("s_suppkey") % 4).as("shard"))
@@ -1609,17 +1588,18 @@ object Relational {
     "sink_parquet_roundtrip",
     (s, dir) => {
       val tmp = Scratch.perCall(s, "sink_pq")
-      Tables.supplier(s, dir)
+      val byNation = Tables.supplier(s, dir)
         .groupBy("s_nationkey")
         .agg(count(lit(1)).as("n_supp"), sumMoney(dec2(col("s_acctbal"))).as("bal"))
-        .write.mode("overwrite").parquet(s"$tmp/supp_by_nation")
-      s.read.parquet(s"$tmp/supp_by_nation").orderBy("s_nationkey")
+      byNation.write.mode("overwrite").parquet(s"$tmp/supp_by_nation")
+      s.read.schema(byNation.schema).parquet(s"$tmp/supp_by_nation")
     },
     Some("""
       SELECT s_nationkey, COUNT(*) AS n_supp,
         CAST(SUM(CAST(s_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS bal
       FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey
-    """.stripMargin.trim))
+    """.stripMargin.trim),
+    boundedOrder = Seq("s_nationkey"))
 
   /** CSV and JSON-lines writers/readers with explicit schema; the union of
     * both round-trips must contain every nation exactly twice.
@@ -1635,19 +1615,18 @@ object Relational {
       val n = Tables.nation(s, dir)
       n.write.mode("overwrite").option("header", "true").csv(s"$tmp/csv")
       n.write.mode("overwrite").json(s"$tmp/json")
-      val schema = Tables.expectedSchemas("nation")
-      val c = s.read.schema(schema).option("header", "true").csv(s"$tmp/csv")
-      val j = s.read.schema(schema).json(s"$tmp/json")
+      val c = s.read.schema(n.schema).option("header", "true").csv(s"$tmp/csv")
+      val j = s.read.schema(n.schema).json(s"$tmp/json")
       c.union(j)
         .groupBy("n_nationkey", "n_name")
         .agg(count(lit(1)).as("copies"))
-        .orderBy("n_nationkey")
     },
     Some("""
       SELECT n_nationkey, n_name, COUNT(*) AS copies
       FROM (SELECT * FROM nation UNION ALL SELECT * FROM nation)
       GROUP BY 1, 2 ORDER BY n_nationkey
-    """.stripMargin.trim))
+    """.stripMargin.trim),
+    boundedOrder = Seq("n_nationkey"))
 
   /** TEXT-format roundtrip — the rawest source Spark offers (one string
     * column per line, the shape log shippers and legacy feeds deliver):
@@ -1801,22 +1780,22 @@ object Relational {
     "sink_partitioned_prune",
     (s, dir) => {
       val tmp = Scratch.perCall(s, "sink_part")
-      Tables.documents(s, dir)
-        .write.mode("overwrite").partitionBy("lang").parquet(s"$tmp/docs_by_lang")
-      s.read.parquet(s"$tmp/docs_by_lang")
+      val docs = Tables.documents(s, dir)
+      docs.write.mode("overwrite").partitionBy("lang").parquet(s"$tmp/docs_by_lang")
+      s.read.schema(docs.schema).parquet(s"$tmp/docs_by_lang")
         .filter(col("lang").isin("en", "fr"))
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"),
           sum("n_chars").as("sum_chars"),
           min("doc_id").as("min_id"),
           max("doc_id").as("max_id"))
-        .orderBy("lang")
     },
     Some("""SELECT lang, COUNT(*) AS n_docs,
               CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
               MIN(doc_id) AS min_id, MAX(doc_id) AS max_id
             FROM documents WHERE lang IN ('en', 'fr')
-            GROUP BY lang ORDER BY lang"""))
+            GROUP BY lang ORDER BY lang"""),
+    boundedOrder = Seq("lang"))
 
   /** POSITION DELETES (deletion vectors) — the third delete mechanism
     * of the modern lake, distinct from everything the MOR family
@@ -1862,8 +1841,8 @@ object Relational {
     "sink_position_delete",
     (s, dir) => {
       val p = posDeleteDirs(s, dir)
-      val dv = s.read.parquet(s"$p/dv")
-      s.read.parquet(s"$p/base")
+      val dv = Tables.parquet(s, s"$p/dv")
+      Tables.parquet(s, s"$p/base")
         .select(col("_metadata.file_path").as("file_path"),
           col("_metadata.row_index").as("row_index"),
           col("o_orderstatus").as("status"), col("o_totalprice"),
@@ -1941,9 +1920,9 @@ object Relational {
     "sink_equality_delete",
     (s, dir) => {
       val p = eqDeleteDirs(s, dir)
-      val rows = s.read.parquet(s"$p/d0")
-        .unionByName(s.read.parquet(s"$p/d2"))
-      val dels = s.read.parquet(s"$p/del")
+      val rows = Tables.parquet(s, s"$p/d0")
+        .unionByName(Tables.parquet(s, s"$p/d2"))
+      val dels = Tables.parquet(s, s"$p/del")
         .select(col("o_orderkey").as("d_key"), col("dseq"))
       rows.join(dels,
           col("o_orderkey") === col("d_key") && col("dseq") > col("seq"),
@@ -1997,12 +1976,8 @@ object Relational {
   val profileDrift: Op = Op(
     "profile_drift",
     (s, dir) => {
-      val logRoot = morLog(s, dir)
-      val v0 = s.read.parquet(s"$logRoot/base")
-      val v2 = foldLatest(
-        v0.select(col("o_orderkey"), col("status"), col("price"),
-            lit(0L).as("seq"), lit("U").as("op"))
-          .unionByName(s.read.parquet(s"$logRoot/delta")), "o_orderkey")
+      val v0 = Tables.parquet(s, s"${morLog(s, dir)}/base")
+      val v2 = foldLatest(morLogRows(s, dir), "o_orderkey")
       def bands(df: DataFrame, n: String): DataFrame =
         df.select(least(floor(col("price") / 50000), lit(11)).cast(IntegerType)
             .as("band"))
@@ -2127,12 +2102,12 @@ object Relational {
     (s, dir) => {
       val (p, conflicts) = occCommitLog(s, dir)
       val versions = new java.io.File(s"$p/_commits").list().toSeq.sorted
-      val log = s.read.parquet(s"$p/base")
+      val log = Tables.parquet(s, s"$p/base")
         .select(col("o_orderkey"), col("status"), col("price"),
           lit(0L).as("seq"), lit("U").as("op"))
         .unionByName(
           versions.filter(_ != "v0").map { v =>
-            s.read.parquet(s"$p/delta_$v")
+            Tables.parquet(s, s"$p/delta_$v")
               .select(col("o_orderkey"), col("status"), col("price"),
                 lit(v.drop(1).toLong).as("seq"), lit("U").as("op"))
           }.reduce(_ unionByName _))
@@ -2212,10 +2187,10 @@ object Relational {
       // column's own NTZ type and the date residual remains
       // pushdown-eligible (round-14 review — a cast on the column side
       // would force post-scan row filtering of all of y=1997)
-      val gen1 = s.read.parquet(s"$p/gen1")
+      val gen1 = Tables.parquet(s, s"$p/gen1")
         .filter(col("y") === 1997 && col("o_orderdate") >= lit("1997-11-01"))
         .select(col("o_orderdate"), col("o_totalprice"))
-      val gen2 = s.read.parquet(s"$p/gen2")
+      val gen2 = Tables.parquet(s, s"$p/gen2")
         .filter(col("y") === 1998 && col("m").isin(1, 2))
         .select(col("o_orderdate"), col("o_totalprice"))
       gen1.unionByName(gen2)
@@ -2297,13 +2272,13 @@ object Relational {
         .select(col("k").as("s_nationkey"),
           split(col("v"), "\\|").getItem(0).cast(LongType).as("n_supp"),
           split(col("v"), "\\|").getItem(1).as("bal_str"))
-        .orderBy("s_nationkey")
     },
     Some("""
       SELECT s_nationkey, COUNT(*) AS n_supp,
         CAST(SUM(CAST(s_acctbal AS DECIMAL(12,2))) AS VARCHAR) AS bal_str
       FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey
-    """.stripMargin.trim))
+    """.stripMargin.trim),
+    boundedOrder = Seq("s_nationkey"))
 
   /** Bucketed co-located join — the zero-shuffle join layout: both sides
     * written with `bucketBy(8, key)` + `sortBy(key)` into external
@@ -3965,7 +3940,7 @@ object Relational {
       s2.conf.set("spark.sql.sources.useV1SourceList", "")
       s2.conf.set("spark.sql.parquet.aggregatePushdown", "true")
       s2.conf.set("spark.sql.session.timeZone", "UTC")
-      s2.read.parquet(s"$dir/lineitem.parquet")
+      Tables.load(s2, dir, "lineitem")
         .agg(count(lit(1)).as("n_rows"),
           min(col("l_orderkey")).as("min_key"),
           max(col("l_orderkey")).as("max_key"))
@@ -4002,21 +3977,21 @@ object Relational {
   val joinDppPartitioned: Op = Op(
     "join_dpp_partitioned",
     (s, dir) => {
-      val facts = s.read.parquet(dppFacts(s, dir))
+      val facts = Tables.parquet(s, dppFacts(s, dir))
       val dim = Tables.documents(s, dir).select(col("lang")).distinct()
         .withColumn("tier",
           when(col("lang").isin("en", "fr", "es"), "latin").otherwise("other"))
       facts.join(broadcast(dim.filter(col("tier") === "latin")), "lang")
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))
-        .orderBy("lang")
     },
     Some("""
       SELECT lang, COUNT(*) AS n_docs,
         CAST(SUM(n_chars) AS BIGINT) AS sum_chars
       FROM documents WHERE lang IN ('en', 'fr', 'es')
       GROUP BY lang ORDER BY lang
-    """.stripMargin.trim))
+    """.stripMargin.trim),
+    boundedOrder = Seq("lang"))
 
   /** NESTED-schema pruning — the scan optimization for struct/array
     * columns: documents re-materialized with a `meta` STRUCT and a
@@ -4251,7 +4226,7 @@ object Relational {
   private def statsIndexDirs(s: SparkSession, dir: String): String =
     statsIndexWritten(s, dir) {
       val p = Scratch.shared(s, dir, "stats_index")
-      s.read.parquet(clusteredOrders(s, dir))
+      Tables.parquet(s, clusteredOrders(s, dir))
         .select(col("_metadata.file_path").as("file_path"), col("o_totalprice"))
         .groupBy("file_path")
         .agg(min("o_totalprice").as("min_price"),
@@ -4266,12 +4241,12 @@ object Relational {
     (s, dir) => {
       val p = statsIndexDirs(s, dir)
       val (lo, hi) = (200000.0, 210000.0)
-      val survivors = s.read.parquet(s"$p/stats")
+      val survivors = Tables.parquet(s, s"$p/stats")
         .filter(col("max_price") >= lo && col("min_price") < hi)
         .select("file_path").collect().map(_.getString(0)).sorted
       val src =
         if (survivors.nonEmpty) s.read.parquet(survivors.toIndexedSeq: _*)
-        else s.read.parquet(clusteredOrders(s, dir)).filter(lit(false))
+        else Tables.parquet(s, clusteredOrders(s, dir)).filter(lit(false))
       src.filter(col("o_totalprice") >= lo && col("o_totalprice") < hi)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
@@ -4326,7 +4301,7 @@ object Relational {
   private def bloomIndexDirs(s: SparkSession, dir: String): String =
     bloomIndexWritten(s, dir) {
       val p = Scratch.shared(s, dir, "bloom_index")
-      s.read.parquet(clusteredOrders(s, dir))
+      Tables.parquet(s, clusteredOrders(s, dir))
         .select(col("_metadata.file_path").as("file_path"),
           col("o_orderkey").as("k"))
         .select(col("file_path"),
@@ -4352,7 +4327,7 @@ object Relational {
     * negatives on the production subplan. */
   private[graft] def bloomSurvivors(s: SparkSession, dir: String): DataFrame = {
     val p = bloomIndexDirs(s, dir)
-    val bloom = s.read.parquet(s"$p/bloom")
+    val bloom = Tables.parquet(s, s"$p/bloom")
     val pp = Tables.orders(s, dir)
       .filter(col("o_orderkey") % 2500 === 0)
       .select(col("o_orderkey").as("k"))
@@ -4379,7 +4354,7 @@ object Relational {
         .collect().map(_.getString(0)).sorted
       val src =
         if (files.nonEmpty) s.read.parquet(files.toIndexedSeq: _*)
-        else s.read.parquet(clusteredOrders(s, dir)).filter(lit(false))
+        else Tables.parquet(s, clusteredOrders(s, dir)).filter(lit(false))
       src.filter(col("o_orderkey") % 2500 === 0)
         .select(col("o_orderkey"), col("o_custkey"),
           col("o_orderstatus").as("status"),

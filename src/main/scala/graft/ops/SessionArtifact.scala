@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
 /** Once-per-(session, fixture dir) artifact cache — the shared helper
   * behind every "build once, consume many" op artifact (the verified
   * near-dup pair set, the IVF fit, the bucketed tables, the streaming
-  * replay source). Keyed on the SparkContext OBJECT (reference
+  * replay source, the parquet footer schemas `Tables.parquet` reads
+  * with, keyed by path). Keyed on the SparkContext OBJECT (reference
   * equality — SparkContext doesn't override equals), not its identity
   * hash: a recycled address in a long-lived JVM must never serve a
   * dead session's artifact (checkpoint blocks and catalog entries die
@@ -16,7 +17,7 @@ import org.apache.spark.sql.SparkSession
   * rebuilds, so a changed fixture can't be served stale across driver
   * runs; entries for stopped contexts are few per JVM and harmless.
   */
-private[ops] final class SessionArtifact[A] {
+private[graft] final class SessionArtifact[A] {
   private val cache = new ConcurrentHashMap[(SparkContext, String), A]()
   def apply(s: SparkSession, dir: String)(build: => A): A =
     cache.computeIfAbsent((s.sparkContext, dir), _ => build)

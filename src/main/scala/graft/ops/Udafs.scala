@@ -170,7 +170,6 @@ object Udafs {
         .agg(
           round(wavg(col("l_extendedprice"), col("l_quantity")), 6).as("wavg_price"),
           count(lit(1)).as("n"))
-        .orderBy("l_returnflag")
     },
     Some("""
       SELECT l_returnflag,
@@ -179,7 +178,8 @@ object Udafs {
           / CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE), 6) AS wavg_price,
         COUNT(*) AS n
       FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-    """.stripMargin.trim))
+    """.stripMargin.trim),
+    boundedOrder = Seq("l_returnflag"))
 
   /** The UDTF surface, GRADED — the custom `ChunkSplit` Generator
     * (functions/ChunkSplit.scala) invoked through SQL exactly as a user

@@ -4,11 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types._
 
+import graft.ops.SessionArtifact
+
 /** Typed catalog over the fixture lake (parquet files, one per table —
   * see TESTDATA.md / FIXTURES.md). The storage layer is plain files; Spark
-  * is only the read/transform engine, so every loader is a thin
-  * `spark.read.parquet` with the expected schema documented for fail-fast
-  * assertions in tests.
+  * is only the read/transform engine. Every loader goes through
+  * [[Tables.parquet]], which infers a path's footer schema once per
+  * SparkContext and then reads with that schema, so a warm build launches
+  * no schema-inference job. `expectedSchemas` documents the catalog for
+  * fail-fast assertions in tests; it is never handed to the reader.
   *
   * Scale note (100 TB): these single-file fixtures stand in for
   * directory-partitioned lakes. All downstream operators only assume "a
@@ -20,8 +24,19 @@ import org.apache.spark.sql.types._
   */
 object Tables {
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private val footers = new SessionArtifact[StructType]
+
+  /** Reads the parquet files at `path` with the footer schema observed on
+    * the first read of `path` in this SparkContext. Only for paths whose
+    * schema is fixed for the session's life: fixture tables and
+    * `Scratch.shared` artifacts. A dir that every build rewrites passes
+    * the schema it just wrote to `read.schema` instead.
+    */
+  def parquet(s: SparkSession, path: String): DataFrame =
+    s.read.schema(footers(s, path)(s.read.parquet(path).schema)).parquet(path)
+
+  def load(s: SparkSession, dir: String, name: String): DataFrame =
+    parquet(s, s"$dir/$name.parquet")
 
   def region(s: SparkSession, dir: String): DataFrame = load(s, dir, "region")
   def nation(s: SparkSession, dir: String): DataFrame = load(s, dir, "nation")
@@ -34,7 +49,8 @@ object Tables {
     * (which Spark 4.1.2 refuses to read as a timestamp —
     * [PARQUET_TYPE_ILLEGAL] — so it surfaces as a raw nanos long under the
     * legacy conf) in earlier drops, TIMESTAMP(MICROS, ntz) in current ones.
-    * The loader adapts on the OBSERVED type instead of assuming either
+    * The loader adapts on the OBSERVED type (the cached footer is the one
+    * the reader saw, never `expectedSchemas`) instead of assuming either
     * generation, normalizing every consumer to one TimestampType column:
     *   - LongType        → nanos-as-long fixture: µs-truncate + convert
     *   - TimestampNTZType→ µs ntz fixture: reinterpret as UTC instant

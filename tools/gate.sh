@@ -2,7 +2,8 @@
 # The full end-of-round gate, one command (see .claude/skills/verify/SKILL.md):
 #   compile -> ScalaTest -> Verify+DuckDB oracle at sf0.01 AND sf0.001
 #   -> partition-invariance probe (CPUS=1 vs 4, row-exact)
-#   -> one untraced perfbench run per workload -> Bench sf0.1.
+#   -> one untraced and one traced perfbench run per workload
+#   -> Bench sf0.1.
 # Exits nonzero on the first failure. ~8 min on this machine.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -43,6 +44,18 @@ EOF
 for w in analytics_mix ingest_mix; do
   echo "== perfbench $w (untraced) =="
   python3 perfbench/run.py --workload "$w" --seed 1 --seconds 20 --trace 0
+done
+
+# the counters that do not drift between runs, per execution: every
+# perf claim cites these next to its timings
+for w in analytics_mix ingest_mix; do
+  echo "== perfbench $w (traced) =="
+  python3 perfbench/run.py --workload "$w" --seed 1 --seconds 20 --trace 1 | tail -n 1 |
+    python3 -c '
+import json, sys
+m = json.loads(sys.stdin.read())["metrics"]
+for k in ("spark.jobs", "spark.stages", "plan.shuffle_exchanges"):
+    print(k, round(m[k]["value"], 2))'
 done
 
 echo "== bench sf0.1 =="
