@@ -44,7 +44,8 @@ object GraftExtensions {
   /** Installs the catalog on `s` (idempotent: the entries are fixed
     * values, so a repeat install puts back what is already there).
     * Covers `s` only — a session made by `s.newSession()` starts from
-    * the built-in registry and needs its own install.
+    * the built-in registry and needs its own install (`SessionClone`
+    * installs it on every clone it makes).
     */
   def register(s: SparkSession): Unit = {
     val registry = s.sessionState.functionRegistry

@@ -14,8 +14,10 @@ import graft.functions.GraftExtensions
   * `build` first installs the `graft_*` kernel catalog
   * (`GraftExtensions.register`) on the session it is given, then runs
   * the op's own build function, so every caller gets a provisioned
-  * session. Precondition: the install covers that session only — a frame
-  * an op builds on `s.newSession()` resolves no `graft_*` function.
+  * session. The install covers that session only, so no build calls
+  * `s.newSession()`: an op that needs its own conf builds on
+  * `SessionClone(s, overrides)`, the one clone per (context, conf) that
+  * carries the catalog and is reused by every build.
   *
   * `boundedOrder` holds the total-order keys of a BOUNDED result, one
   * whose row count a dimension fixes (flags, nations, languages), never

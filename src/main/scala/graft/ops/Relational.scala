@@ -3927,8 +3927,8 @@ object Relational {
     * what's the key range" is free at 100 TB. Footer pushdown only
     * exists on the V2 parquet path, and switching the WHOLE engine to
     * V2 would cost the V1-only features other ops depend on (bucketed
-    * reads), so this op runs in a session CLONE (`newSession`: shared
-    * SparkContext, private SQLConf) with V2 parquet + aggregate
+    * reads), so this op runs in a `SessionClone` (shared SparkContext,
+    * private SQLConf, cached per conf) with V2 parquet + aggregate
     * pushdown enabled — conf isolation without touching any other
     * query's path. Semantics-neutral either way; the op grades the
     * values and pins the plan shape.
@@ -3936,10 +3936,10 @@ object Relational {
   val scanAggPushdown: Op = Op(
     "scan_agg_pushdown",
     (s, dir) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.sources.useV1SourceList", "")
-      s2.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-      s2.conf.set("spark.sql.session.timeZone", "UTC")
+      val s2 = SessionClone(s, Map(
+        "spark.sql.sources.useV1SourceList" -> "",
+        "spark.sql.parquet.aggregatePushdown" -> "true",
+        "spark.sql.session.timeZone" -> "UTC"))
       Tables.load(s2, dir, "lineitem")
         .agg(count(lit(1)).as("n_rows"),
           min(col("l_orderkey")).as("min_key"),
@@ -4044,12 +4044,11 @@ object Relational {
   val joinBloomRuntime: Op = Op(
     "join_bloom_runtime",
     (s, dir) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone", "UTC")
-      s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      s2.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val s2 = SessionClone(s, Map(
+        "spark.sql.session.timeZone" -> "UTC",
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1"))
       val dim = Tables.part(s2, dir)
         .filter(col("p_brand") === "Brand#11" && col("p_size") < 10)
         .select(col("p_partkey"), col("p_brand"), col("p_size"))
@@ -4121,10 +4120,10 @@ object Relational {
     "join_cbo_reorder",
     (s, dir) => {
       val tag = cboTables(s, dir)
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone", "UTC")
-      s2.conf.set("spark.sql.cbo.enabled", "true")
-      s2.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+      val s2 = SessionClone(s, Map(
+        "spark.sql.session.timeZone" -> "UTC",
+        "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.cbo.joinReorder.enabled" -> "true"))
       s2.sql(s"""
         SELECT c_mktsegment, COUNT(*) AS n_lines,
           CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS ext_price

@@ -10,10 +10,13 @@ import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Concurrent clients on one session: four threads share the test
-  * session and each builds + collects the same op three times. Every op
-  * here rewrites lake files on each build, so two clients writing to one
-  * dir would read each other's half-written or overwritten files; every
-  * result must equal the rows a single client gets.
+  * session and each builds + collects the same op three times; every
+  * result must equal the rows a single client gets. The first 19 ops
+  * rewrite lake files on each build, so two clients writing to one dir
+  * would read each other's half-written or overwritten files. The last
+  * four are stream replays, which share one session clone per conf: two
+  * clients of the same replay run their queries side by side on one
+  * clone (the last one on the RocksDB state store).
   */
 class ReentrancySuite extends AnyFunSuite {
 
@@ -28,7 +31,8 @@ class ReentrancySuite extends AnyFunSuite {
     "sink_schema_evolution", "scan_csv_permissive", "scan_json_permissive",
     "scan_nested_prune", "sink_clustered_prune", "sink_zorder_prune",
     "sink_hilbert_prune", "stream_replay_sink_commit", "stream_replay_exactly_once",
-    "sink_model_artifact_refresh")
+    "sink_model_artifact_refresh", "stream_replay_dedup_within_wm",
+    "stream_replay_tumbling", "stream_replay_upsert", "stream_replay_transform_state")
 
   private def rows(name: String): Seq[Row] =
     SparkEntry.queries(name)(s, TestSpark.Sf0001).collect().toSeq.sortBy(_.toString)

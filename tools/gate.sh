@@ -1,12 +1,24 @@
 #!/usr/bin/env bash
 # The full end-of-round gate, one command (see .claude/skills/verify/SKILL.md):
-#   compile -> ScalaTest -> Verify+DuckDB oracle at sf0.01 AND sf0.001
+#   no newSession() outside ops.SessionClone -> compile -> ScalaTest
+#   -> Verify+DuckDB oracle at sf0.01 AND sf0.001
 #   -> partition-invariance probe (CPUS=1 vs 4, row-exact)
-#   -> one untraced and one traced perfbench run per workload
+#   -> one untraced perfbench run per workload (prints heap_retained_mb)
+#   -> one traced perfbench run per workload
 #   -> Bench sf0.1.
 # Exits nonzero on the first failure. ~8 min on this machine.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+
+echo "== no session made inside a build =="
+# a build that needs its own conf goes through ops.SessionClone, the one
+# place a session is made (comment lines are not code)
+if grep -rn 'newSession()' src/main/scala/graft --include='*.scala' |
+    grep -v '^src/main/scala/graft/ops/SessionArtifact.scala:' |
+    grep -vE '^[^:]+:[0-9]+:[[:space:]]*(\*|//)'; then
+  echo "newSession() outside ops.SessionClone" >&2
+  exit 1
+fi
 
 echo "== compile + test =="
 sbt -batch compile
@@ -43,7 +55,12 @@ EOF
 
 for w in analytics_mix ingest_mix; do
   echo "== perfbench $w (untraced) =="
-  python3 perfbench/run.py --workload "$w" --seed 1 --seconds 20 --trace 0
+  res="$(python3 perfbench/run.py --workload "$w" --seed 1 --seconds 20 --trace 0)"
+  echo "$res"
+  echo "$res" | tail -n 1 | python3 -c '
+import json, sys
+m = json.loads(sys.stdin.read())["metrics"]
+print("heap_retained_mb", round(m["heap_retained_mb"]["value"], 2))'
 done
 
 # the counters that do not drift between runs, per execution: every
