@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -176,53 +176,180 @@ object EventTime {
     * join's parked rows) and cost 4× less per-micro-batch setup +
     * delta-file churn than the session default of 32 (results are
     * partition-count invariant — the CPUS=1-vs-4 gate proves exactly
-    * that); and `unloadOnCommit`, so an AvailableNow replay's
-    * state-store providers close with their last commit instead of
-    * staying loaded until the next maintenance pass. `extraConf` is
+    * that); and no state map kept in memory after a commit
+    * (`maxBatchesToRetainInMemory` 0), so a replay's state leaves the
+    * heap with its last commit while its providers wait for the next
+    * maintenance pass. Never `unloadOnCommit`: it closes each provider
+    * as its task ends, Spark's background maintenance of a provider
+    * closed that way fails and then closes whatever provider is loaded
+    * under the same id, the one the next micro-batch has just opened,
+    * and that batch's commit dies with CANNOT_WRITE_STATE_STORE.
+    * `extraConf` is
     * the per-op hook (e.g. the RocksDB state-store provider for
     * transformWithState); it wins over the pins. The clone is shared:
-    * never `conf.set` on it.
+    * never `conf.set` on it. Artifact isolation is off on the clone:
+    * Spark clones the session for every streaming query, and with
+    * isolation on each clone's tasks run under a new executor
+    * classloader, which keys Spark's codegen cache anew, so every warm
+    * replay recompiled its generated classes. No graft session adds
+    * artifacts, so nothing is shared that isolation would have kept
+    * apart.
     */
-  private[graft] def replaySession(s: org.apache.spark.sql.SparkSession,
-      extraConf: Map[String, String] = Map.empty): org.apache.spark.sql.SparkSession =
+  private[graft] def replaySession(s: SparkSession,
+      extraConf: Map[String, String] = Map.empty): SparkSession =
     SessionClone(s, Map(
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.shuffle.partitions" -> "8",
-      "spark.sql.streaming.stateStore.unloadOnCommit" -> "true") ++ extraConf)
+      "spark.sql.streaming.maxBatchesToRetainInMemory" -> "0",
+      "spark.sql.artifact.isolation.enabled" -> "false") ++ extraConf)
 
-  private val replayCalls = new java.util.concurrent.atomic.AtomicLong
+  /** Where a replay's rows go. */
+  private[graft] sealed trait ReplaySink[A]
 
-  /** Runs `agg` as a REAL Structured Streaming query (MicroBatchExecution,
-    * state store, AvailableNow trigger) into a memory sink and returns the
-    * sink table. The driver grades the RESULT like any batch query — this
-    * is what puts true streaming on the correctness scoreboard instead of
-    * test-only (round-5 verdict "What's missing" #3).
+  /** A memory sink in output `mode`; the replay returns its rows.
     *
     * The memory sink is driver-resident, which is legitimate here ONLY
-    * because it holds the RESULT, and every replay's result is
+    * because it holds the RESULT, and every memory replay's result is
     * output-bounded — calendar-bounded window cells or user sessions
     * (≤3 600 rows at any SF), or the interval join's sparse match set
     * (tight per-user time window), never raw data. Do not pattern-match this
     * to a driver-side collect of the stream: an unbounded deployment
     * replaces it with a file/table sink in update mode + watermark.
-    *
-    * The replay clone is shared by every build with the same conf, so
-    * the sink's query name is `qname` plus a per-call number (two
-    * concurrent clients never collide on an active query name), and
-    * its temp view is dropped once the result is resolved: the
-    * returned frame keeps the sink's rows, the clone keeps nothing.
     */
-  private def runReplay(s: org.apache.spark.sql.SparkSession, qname: String,
-      mode: String, extraConf: Map[String, String] = Map.empty)(
-      build: org.apache.spark.sql.SparkSession => DataFrame): DataFrame = {
+  private[graft] final case class ToMemory(mode: String) extends ReplaySink[DataFrame]
+
+  /** Every micro-batch and its id, handed to `onBatch` on the query's
+    * thread. With a `checkpoint` dir, a rerun resumes after the last
+    * batch the previous run completed, under the same batch ids.
+    */
+  private[graft] final case class EachBatch(onBatch: (DataFrame, Long) => Unit,
+      checkpoint: Option[String] = None) extends ReplaySink[Unit]
+
+  private val replayCalls = new java.util.concurrent.atomic.AtomicLong
+
+  /** The one place a streaming query starts: a REAL Structured Streaming
+    * query (MicroBatchExecution, state store, AvailableNow trigger) on
+    * the replay clone (`replaySession` with `extraConf`). It reads the
+    * parquet files under `src` with `schema` (events by default),
+    * `maxFilesPerTrigger` files a micro-batch when positive (else the
+    * source's default), lets `query` shape that stream (it gets the
+    * clone, for static sides and encoders), drains it into `sink` and
+    * stops the query whether it ends or fails; a failure is rethrown.
+    * This is what puts true streaming on the oracle scoreboard: the
+    * RESULT is graded like any batch query's.
+    *
+    * The clone is shared by every build with the same conf, so a memory
+    * sink's name is unique per call (two concurrent clients never
+    * collide on an active query name), and its temp view is dropped
+    * once the result is resolved: the returned frame keeps the sink's
+    * rows, the clone keeps nothing.
+    */
+  private[graft] def replay[A](s: SparkSession, src: String, sink: ReplaySink[A],
+      maxFilesPerTrigger: Int = 0, schema: StructType = Tables.expectedSchemas("events"),
+      extraConf: Map[String, String] = Map.empty)(
+      query: (SparkSession, DataFrame) => DataFrame): A = {
     val s2 = replaySession(s, extraConf)
-    val name = s"${qname}_${replayCalls.incrementAndGet()}"
-    val q = build(s2).writeStream.format("memory").queryName(name)
-      .outputMode(mode)
+    val reader = s2.readStream.schema(schema)
+    val paced =
+      if (maxFilesPerTrigger > 0) reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toLong)
+      else reader
+    val out = query(s2, paced.parquet(src)).writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try { q.awaitTermination(); s2.table(name) }
-    finally { q.stop(); s2.catalog.dropTempView(name) }
+    def drain[B](w: org.apache.spark.sql.streaming.DataStreamWriter[Row])(done: => B): B = {
+      val q = w.start()
+      try { q.awaitTermination(); done } finally q.stop()
+    }
+    sink match {
+      case ToMemory(mode) =>
+        val name = s"graft_replay_${replayCalls.incrementAndGet()}"
+        try drain(out.format("memory").queryName(name).outputMode(mode))(s2.table(name))
+        finally s2.catalog.dropTempView(name)
+      case EachBatch(onBatch, checkpoint) =>
+        drain(checkpoint.fold(out)(out.option("checkpointLocation", _))
+          .foreachBatch(onBatch))(())
+    }
+  }
+
+  /** max(rec) per `key`: the ASSOCIATIVE keep-latest reduce — `rec` is a
+    * struct whose leading fields order the records (ts or seq first) —
+    * so reducing parts and then their union gives the same rows as
+    * reducing the whole, however a stream splits into micro-batches.
+    */
+  private def latestPerKey(df: DataFrame, key: String): DataFrame =
+    df.groupBy(key).agg(max(col("rec")).as("rec"))
+
+  /** Keep-latest state per `key`, folded one micro-batch at a time
+    * (`fold` is an `EachBatch` body): each batch reduces itself, unions
+    * the state so far, re-reduces and localCheckpoints to truncate
+    * lineage — the storage-layer analog of the state store, DISTRIBUTED
+    * and bounded by the key count, never a driver collect of raw data.
+    * The superseded state's checkpoint is released once the new one is
+    * materialized. `init` seeds the state (a snapshot to catch up from).
+    * At 100 TB the same fold MERGEs into a keyed table; the per-batch
+    * reduce bounds what moves.
+    */
+  private[graft] final class LatestByKey(key: String, init: Option[DataFrame] = None) {
+    @volatile private var state = init
+    def fold(batch: DataFrame, bid: Long): Unit = {
+      val b = latestPerKey(batch, key)
+      val next = state.fold(b)(st => latestPerKey(st.union(b), key)).localCheckpoint(true)
+      state.foreach(releaseCheckpoint)
+      state = Some(next)
+    }
+    /** The state after the last batch; the replay must have run one. */
+    def result: DataFrame = state.get
+  }
+
+  /** The keep-latest-per-user output of the upsert family:
+    * second-precision ts string and the precision-proofed DOUBLE value
+    * (DECIMAL(12,2) snap first).
+    */
+  private def latestUserRows(state: DataFrame): DataFrame =
+    state.select(col("user_id"), fmtSec(col("rec.ts")).as("last_ts"),
+      col("rec.event_id").as("last_event_id"),
+      dec2(col("rec.value")).cast(DoubleType).as("last_value"))
+      .orderBy("user_id")
+
+  /** An idempotent micro-batch commit log under the per-call scratch dir
+    * `name`, emptied on creation (resolve it on the build thread): a
+    * batch's rows land in `data/batch=<id>` through the classic commit
+    * protocol — write a temp dir, ATOMIC rename, then record the id in
+    * the `commits/` manifest. A redelivered batch is a no-op.
+    */
+  private final class CommitLog(s: SparkSession, name: String) {
+    val dir: String = Scratch.perCall(s, name)
+    Scratch.empty(dir)
+    new java.io.File(s"$dir/commits").mkdirs()
+    new java.io.File(s"$dir/data").mkdirs()
+    @volatile private var written: StructType = _
+
+    def commit(bid: Long, rows: DataFrame): Unit = {
+      written = rows.schema
+      val mark = new java.io.File(s"$dir/commits/$bid")
+      val dest = java.nio.file.Paths.get(s"$dir/data/batch=$bid")
+      // the atomic RENAME is the commit point, the mark only the
+      // manifest record — so an existing dest counts as committed even
+      // when the writer died between rename and mark (review finding:
+      // checking the mark alone left a redelivery window where the
+      // second attempt crashed on the existing dir instead of no-oping)
+      if (mark.exists || java.nio.file.Files.exists(dest)) return
+      val tmpDir = s"$dir/_tmp_$bid"
+      rows.write.mode("overwrite").parquet(tmpDir)
+      java.nio.file.Files.move(java.nio.file.Paths.get(tmpDir), dest,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      if (!mark.createNewFile() && !mark.exists)
+        throw new java.io.IOException(
+          s"batch $bid committed but its manifest mark could not be recorded")
+    }
+
+    /** Batch ids in the manifest. */
+    def committed: Set[String] =
+      Option(new java.io.File(s"$dir/commits").list()).map(_.toSet).getOrElse(Set.empty)
+
+    /** The committed rows, read on the replay clone with the schema they
+      * were written with; `batch` is discovered from the paths. */
+    def read: DataFrame =
+      replaySession(s).read.schema(written).parquet(s"$dir/data")
   }
 
   /** TRUE-STREAMING twin of `stream_tumbling`, graded: file-source replay
@@ -243,9 +370,8 @@ object EventTime {
     "stream_replay_tumbling",
     (s, dir) => {
       val src = replaySrc(s, dir)
-      runReplay(s, "graft_stream_replay_tumbling", "complete") { s2 =>
-        s2.readStream.schema(Tables.expectedSchemas("events")).parquet(src)
-          .select(col("ts"), col("event_type"), dec2(col("value")).as("v"))
+      replay(s, src, ToMemory("complete")) { (_, ev) =>
+        ev.select(col("ts"), col("event_type"), dec2(col("value")).as("v"))
           .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
           .agg(count(lit(1)).as("n"), sumMoney(col("v")).as("sum_value"))
           .select(
@@ -270,9 +396,8 @@ object EventTime {
     "stream_replay_dedup",
     (s, dir) => {
       val src = replaySrc(s, dir)
-      runReplay(s, "graft_stream_replay_dedup", "append") { s2 =>
-        s2.readStream.schema(Tables.expectedSchemas("events")).parquet(src)
-          .dropDuplicates("event_id")
+      replay(s, src, ToMemory("append")) { (_, ev) =>
+        ev.dropDuplicates("event_id")
           .select(
             col("event_id"), fmtSec(col("ts")).as("ts_s"),
             col("user_id"), col("event_type"))
@@ -313,11 +438,8 @@ object EventTime {
     "stream_replay_dedup_within_wm",
     (s, dir) => {
       val src = wmReplaySrc(s, dir)
-      runReplay(s, "graft_stream_replay_dedup_within_wm", "append") { s2 =>
-        s2.readStream.schema(Tables.expectedSchemas("events"))
-          .option("maxFilesPerTrigger", "8")
-          .parquet(src)
-          .withWatermark("ts", "30 minutes")
+      replay(s, src, ToMemory("append"), maxFilesPerTrigger = 8) { (_, ev) =>
+        ev.withWatermark("ts", "30 minutes")
           .dropDuplicatesWithinWatermark("event_id")
           .select(
             col("event_id"), fmtSec(col("ts")).as("ts_s"),
@@ -342,9 +464,8 @@ object EventTime {
     "stream_replay_session",
     (s, dir) => {
       val src = replaySrc(s, dir)
-      runReplay(s, "graft_stream_replay_session", "complete") { s2 =>
-        s2.readStream.schema(Tables.expectedSchemas("events")).parquet(src)
-          .select(col("ts"), col("user_id"), dec2(col("value")).as("v"))
+      replay(s, src, ToMemory("complete")) { (_, ev) =>
+        ev.select(col("ts"), col("user_id"), dec2(col("value")).as("v"))
           .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
           .agg(
             count(lit(1)).as("n_events"),
@@ -371,9 +492,8 @@ object EventTime {
     "stream_replay_sliding",
     (s, dir) => {
       val src = replaySrc(s, dir)
-      runReplay(s, "graft_stream_replay_sliding", "complete") { s2 =>
-        s2.readStream.schema(Tables.expectedSchemas("events")).parquet(src)
-          .select(col("ts"), col("event_type"), dec2(col("value")).as("v"))
+      replay(s, src, ToMemory("complete")) { (_, ev) =>
+        ev.select(col("ts"), col("event_type"), dec2(col("value")).as("v"))
           .groupBy(
             window(col("ts"), "1 hour", "15 minutes").as("w"),
             col("event_type"))
@@ -407,8 +527,7 @@ object EventTime {
     "stream_replay_join",
     (s, dir) => {
       val src = replaySrc(s, dir)
-      runReplay(s, "graft_stream_replay_join", "append") { s2 =>
-        val ev = s2.readStream.schema(Tables.expectedSchemas("events")).parquet(src)
+      replay(s, src, ToMemory("append")) { (_, ev) =>
         val p = ev.filter(col("event_type") === "purchase")
           .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
             col("ts").as("p_ts"))
@@ -452,12 +571,11 @@ object EventTime {
     "stream_replay_dim_enrich",
     (s, dir) => {
       val src = replaySrc(s, dir)
-      runReplay(s, "graft_stream_replay_dim_enrich", "complete") { s2 =>
+      replay(s, src, ToMemory("complete")) { (s2, ev) =>
         val dim = Tables.customer(s2, dir)
           .select(col("c_custkey").as("user_id"),
             col("c_mktsegment").as("segment"))
-        s2.readStream.schema(Tables.expectedSchemas("events")).parquet(src)
-          .select(col("user_id"), col("event_type"), dec2(col("value")).as("v"))
+        ev.select(col("user_id"), col("event_type"), dec2(col("value")).as("v"))
           .join(broadcast(dim), Seq("user_id"))
           .groupBy(col("segment"), col("event_type"))
           .agg(count(lit(1)).as("n"), sumMoney(col("v")).as("sum_value"))
@@ -549,7 +667,7 @@ object EventTime {
     "stream_replay_watermarked",
     (s, dir) => {
       val src = wmReplaySrc(s, dir)
-      runReplay(s, "graft_stream_replay_watermarked", "append") { s2 =>
+      replay(s, src, ToMemory("append"), maxFilesPerTrigger = 4) { (_, ev) =>
         // 4 files per trigger (round-11 diet, DevBench-verified): three
         // micro-batches — [4 oldest, next 4, late file]. The grading
         // is intact: files are consumed in pinned mod-time = ts order,
@@ -557,10 +675,7 @@ object EventTime {
         // arrives LAST and ALONE with the watermark already final, and
         // the watermark still advances across the in-order batches —
         // at ~half the state-store commit cost of 2-file triggers
-        s2.readStream.schema(Tables.expectedSchemas("events"))
-          .option("maxFilesPerTrigger", "4")
-          .parquet(src)
-          .select(col("ts"), col("event_type"), dec2(col("value")).as("v"))
+        ev.select(col("ts"), col("event_type"), dec2(col("value")).as("v"))
           .withWatermark("ts", "30 minutes")
           .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
           .agg(count(lit(1)).as("n"), sumMoney(col("v")).as("sum_value"))
@@ -607,14 +722,11 @@ object EventTime {
     "stream_replay_session_watermarked",
     (s, dir) => {
       val src = wmReplaySrc(s, dir)
-      runReplay(s, "graft_stream_replay_session_wm", "append") { s2 =>
+      replay(s, src, ToMemory("append"), maxFilesPerTrigger = 4) { (_, ev) =>
         // 4 files per trigger (round-11 diet, same argument as the
         // tumbling replay above); sessions still merge across the two
         // in-order batch boundaries and the late file still drops whole
-        s2.readStream.schema(Tables.expectedSchemas("events"))
-          .option("maxFilesPerTrigger", "4")
-          .parquet(src)
-          .select(col("ts"), col("user_id"), dec2(col("value")).as("v"))
+        ev.select(col("ts"), col("user_id"), dec2(col("value")).as("v"))
           .withWatermark("ts", "30 minutes")
           .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
           .agg(count(lit(1)).as("n_events"), sumMoney(col("v")).as("sum_value"),
@@ -659,13 +771,8 @@ object EventTime {
     * max(struct(ts, event_id, value)) per user — ASSOCIATIVE, so the
     * result is bit-identical no matter how the source splits into
     * micro-batches (the graded property; same reason the batch twin
-    * is one window query). State stays DISTRIBUTED and bounded
-    * (≤|users| rows): each batch reduces itself first, unions the
-    * prior state, re-reduces, and localCheckpoints to truncate
-    * lineage — the storage-layer analog of the state store, never a
-    * driver collect of raw data. At 100 TB the same foreachBatch body
-    * MERGEs into a keyed table; the per-batch reduce bounds what
-    * moves. Reads the WATERMARK source (9 ts-ordered files at 4 per
+    * is one window query). The state is a `LatestByKey` fold, bounded
+    * by |users| rows. Reads the WATERMARK source (9 ts-ordered files at 4 per
     * trigger → 3 micro-batches, so the state-merge path provably
     * executes — the single-file generic source would fold in one
     * batch) whose planted late file REDELIVERS the first hour: the
@@ -684,34 +791,12 @@ object EventTime {
   val streamReplayUpsert: Op = Op(
     "stream_replay_upsert",
     (s, dir) => {
-      val src = wmReplaySrc(s, dir)
-      val s2 = replaySession(s)
-      var state: Option[DataFrame] = None
-      val q = s2.readStream.schema(Tables.expectedSchemas("events"))
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-        .select(col("user_id"),
+      val latest = new LatestByKey("user_id")
+      replay(s, wmReplaySrc(s, dir), EachBatch(latest.fold), maxFilesPerTrigger = 4) { (_, ev) =>
+        ev.select(col("user_id"),
           struct(col("ts"), col("event_id"), col("value")).as("rec"))
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            _: Long) =>
-          val bLatest = batch.groupBy("user_id").agg(max(col("rec")).as("rec"))
-          val merged = state match {
-            case Some(st) =>
-              st.union(bLatest).groupBy("user_id").agg(max(col("rec")).as("rec"))
-            case None => bLatest
-          }
-          state = Some(merged.localCheckpoint(true))
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      state.get
-        .select(col("user_id"), fmtSec(col("rec.ts")).as("last_ts"),
-          col("rec.event_id").as("last_event_id"),
-          dec2(col("rec.value")).cast(DoubleType).as("last_value"))
-        .orderBy("user_id")
+      }
+      latestUserRows(latest.result)
     },
     Some("""
       SELECT user_id,
@@ -745,38 +830,15 @@ object EventTime {
   val streamReplayCdcUpsert: Op = Op(
     "stream_replay_cdc_upsert",
     (s, dir) => {
-      val src = wmReplaySrc(s, dir)
-      val s2 = replaySession(s)
-      var state: Option[DataFrame] = None
-      val q = s2.readStream.schema(Tables.expectedSchemas("events"))
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-        .select(col("user_id"),
+      val latest = new LatestByKey("user_id")
+      replay(s, wmReplaySrc(s, dir), EachBatch(latest.fold), maxFilesPerTrigger = 4) { (_, ev) =>
+        ev.select(col("user_id"),
           struct(col("ts"), col("event_id"),
             when(col("event_type") === "error", lit("D")).otherwise(lit("U"))
               .as("op"),
             col("value")).as("rec"))
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            _: Long) =>
-          val bLatest = batch.groupBy("user_id").agg(max(col("rec")).as("rec"))
-          val merged = state match {
-            case Some(st) =>
-              st.union(bLatest).groupBy("user_id").agg(max(col("rec")).as("rec"))
-            case None => bLatest
-          }
-          state = Some(merged.localCheckpoint(true))
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      state.get
-        .filter(col("rec.op") =!= "D")
-        .select(col("user_id"), fmtSec(col("rec.ts")).as("last_ts"),
-          col("rec.event_id").as("last_event_id"),
-          dec2(col("rec.value")).cast(DoubleType).as("last_value"))
-        .orderBy("user_id")
+      }
+      latestUserRows(latest.result.filter(col("rec.op") =!= "D"))
     },
     Some("""
       SELECT user_id,
@@ -817,68 +879,21 @@ object EventTime {
   val streamReplaySinkCommit: Op = Op(
     "stream_replay_sink_commit",
     (s, dir) => {
-      val src = wmReplaySrc(s, dir)
-      val s2 = replaySession(s)
-      val runDir = Scratch.perCall(s, "sink_commit")
-      // wipe the previous run's log so a changed fixture can never be
-      // served stale; the commit protocol below rebuilds it
-      Scratch.empty(runDir)
-      new java.io.File(s"$runDir/commits").mkdirs()
-      new java.io.File(s"$runDir/data").mkdirs()
-      val q = s2.readStream.schema(Tables.expectedSchemas("events"))
-        .option("maxFilesPerTrigger", "4")
-        .parquet(src)
-        .select(col("user_id"),
+      // the previous run's log is wiped, so a changed fixture can never
+      // be served stale; the commit protocol rebuilds it
+      val log = new CommitLog(s, "sink_commit")
+      val commit = (batch: DataFrame, bid: Long) => {
+        val reduced = latestPerKey(batch, "user_id")
+        log.commit(bid, reduced)
+        log.commit(bid, reduced) // simulated redelivery: MUST no-op via the manifest
+      }
+      replay(s, wmReplaySrc(s, dir), EachBatch(commit), maxFilesPerTrigger = 4) { (_, ev) =>
+        ev.select(col("user_id"),
           struct(col("ts"), col("event_id"), col("value")).as("rec"))
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            bid: Long) =>
-          val reduced = batch.groupBy("user_id").agg(max(col("rec")).as("rec"))
-          def commit(): Unit = {
-            val mark = new java.io.File(s"$runDir/commits/$bid")
-            val dest = java.nio.file.Paths.get(s"$runDir/data/batch=$bid")
-            // the atomic RENAME is the commit point, the mark only the
-            // manifest record — so an existing dest counts as committed
-            // even when the writer died between rename and mark (review
-            // finding: checking the mark alone left a redelivery window
-            // where the second attempt crashed on the existing dir
-            // instead of no-oping)
-            if (mark.exists || java.nio.file.Files.exists(dest)) return
-            val tmpDir = s"$runDir/_tmp_$bid"
-            reduced.write.mode("overwrite").parquet(tmpDir)
-            java.nio.file.Files.move(
-              java.nio.file.Paths.get(tmpDir), dest,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            if (!mark.createNewFile() && !mark.exists)
-              throw new java.io.IOException(
-                s"batch $bid committed but its manifest mark could not be recorded")
-            ()
-          }
-          commit()
-          commit() // simulated redelivery: MUST no-op via the manifest
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      s2.read.parquet(s"$runDir/data")
-        .groupBy("user_id").agg(max(col("rec")).as("rec"))
-        .select(col("user_id"), fmtSec(col("rec.ts")).as("last_ts"),
-          col("rec.event_id").as("last_event_id"),
-          dec2(col("rec.value")).cast(DoubleType).as("last_value"))
-        .orderBy("user_id")
+      }
+      latestUserRows(latestPerKey(log.read, "user_id"))
     },
-    Some("""
-      SELECT user_id,
-        strftime(date_trunc('second', ts), '%Y-%m-%d %H:%M:%S') AS last_ts,
-        event_id AS last_event_id,
-        CAST(CAST(value AS DECIMAL(12,2)) AS DOUBLE) AS last_value
-      FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-          ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
-        FROM events
-      ) WHERE rn = 1 ORDER BY user_id
-    """.stripMargin.trim))
+    streamReplayUpsert.oracle)
 
   /** Spread replay source for the exactly-once op: the events table
     * written as a FIXED 12 parquet files, so maxFilesPerTrigger=4 gives
@@ -923,47 +938,22 @@ object EventTime {
     "stream_replay_exactly_once",
     (s, dir) => {
       val src = eoSrc(s, dir)
-      val s2 = replaySession(s)
-      val runDir = Scratch.perCall(s, "stream_eo_run")
       // wipe the previous build's checkpoint + committed log: this op
       // grades the crash/restart protocol, so every build re-runs it
-      Scratch.empty(runDir)
-      new java.io.File(s"$runDir/commits").mkdirs()
-      new java.io.File(s"$runDir/data").mkdirs()
+      val log = new CommitLog(s, "stream_eo_run")
       def run(failAtBatch: Long): Unit = {
-        val q = s2.readStream.schema(Tables.expectedSchemas("events"))
-          .option("maxFilesPerTrigger", "4")
-          .parquet(src)
-          .select(col("user_id"), dec2(col("value")).as("v2"))
-          .writeStream
-          .option("checkpointLocation", s"$runDir/ckpt")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-              bid: Long) =>
-            if (bid >= failAtBatch)
-              throw new RuntimeException(s"planted writer crash at batch $bid")
-            val reduced = batch.groupBy("user_id")
-              .agg(count(lit(1)).as("n"), sum("v2").as("v2sum"))
-            val mark = new java.io.File(s"$runDir/commits/$bid")
-            val dest = java.nio.file.Paths.get(s"$runDir/data/batch=$bid")
-            if (!(mark.exists || java.nio.file.Files.exists(dest))) {
-              val tmpDir = s"$runDir/_tmp_$bid"
-              reduced.write.mode("overwrite").parquet(tmpDir)
-              java.nio.file.Files.move(
-                java.nio.file.Paths.get(tmpDir), dest,
-                java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-              if (!mark.createNewFile() && !mark.exists)
-                throw new java.io.IOException(
-                  s"batch $bid committed but its manifest mark could not be recorded")
-            }
-            ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
+        val commit = (batch: DataFrame, bid: Long) => {
+          if (bid >= failAtBatch)
+            throw new RuntimeException(s"planted writer crash at batch $bid")
+          log.commit(bid, batch.groupBy("user_id")
+            .agg(count(lit(1)).as("n"), sum("v2").as("v2sum")))
+        }
         // the planted crash surfaces as a StreamingQueryException — the
         // restart below is the graded recovery path
-        try q.awaitTermination()
+        try replay(s, src, EachBatch(commit, Some(s"${log.dir}/ckpt")), maxFilesPerTrigger = 4) {
+          (_, ev) => ev.select(col("user_id"), dec2(col("value")).as("v2"))
+        }
         catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => () }
-        finally q.stop()
       }
       run(failAtBatch = 2L)
       // the planted crash must provably have fired: exactly batches 0–1
@@ -971,13 +961,12 @@ object EventTime {
       // to plan 3 micro-batches would otherwise degrade this op to
       // grading plain replay while still matching the oracle (r18
       // ADVICE) — fail loudly instead.
-      val committed = Option(new java.io.File(s"$runDir/commits").list())
-        .map(_.toSet).getOrElse(Set.empty[String])
+      val committed = log.committed
       require(committed == Set("0", "1"),
         s"exactly-once restart path not exercised: committed batches " +
           s"$committed, expected {0, 1} before the planted batch-2 crash")
       run(failAtBatch = Long.MaxValue)
-      s2.read.parquet(s"$runDir/data")
+      log.read
         .groupBy("user_id")
         .agg(sum("n").cast(LongType).as("n_events"),
           sum("v2sum").cast(DoubleType).as("total_value"))
@@ -1012,16 +1001,13 @@ object EventTime {
     (s, dir) => {
       val src = wmReplaySrc(s, dir)
       // transformWithState requires the RocksDB store; passed through
-      // runReplay's extra-conf hook, scoped to the session clone so
+      // the replay's extra-conf hook, scoped to the session clone so
       // batch queries keep the default provider
-      runReplay(s, "graft_stream_tws", "update", Map(
+      replay(s, src, ToMemory("update"), maxFilesPerTrigger = 4, extraConf = Map(
         "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) { s2 =>
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) { (s2, ev) =>
         import s2.implicits._
-        s2.readStream.schema(Tables.expectedSchemas("events"))
-          .option("maxFilesPerTrigger", "4")
-          .parquet(src)
-          .select(col("user_id"), col("event_id"),
+        ev.select(col("user_id"), col("event_id"),
             expr("unix_micros(ts)").as("ts_us"),
             (dec2(col("value")) * 100).cast(LongType).as("cents"))
           .as[graft.streaming.EvIn]
@@ -1093,14 +1079,11 @@ object EventTime {
       // vs 3.73 s at 2 — this op emits ~95k session rows, so the
       // per-user processing work outweighs the saved RocksDB
       // open/commit cycles. Replay default of 8 kept.
-      runReplay(s, "graft_stream_timer_sessions", "append", Map(
+      replay(s, src, ToMemory("append"), maxFilesPerTrigger = 4, extraConf = Map(
         "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) { s2 =>
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) { (s2, ev) =>
         import s2.implicits._
-        s2.readStream.schema(Tables.expectedSchemas("events"))
-          .option("maxFilesPerTrigger", "4")
-          .parquet(src)
-          .select(col("user_id"), col("event_id"), col("ts"),
+        ev.select(col("user_id"), col("event_id"), col("ts"),
             expr("unix_micros(ts)").as("ts_us"))
           .withWatermark("ts", "30 minutes")
           .as[graft.streaming.SessIn]
@@ -2697,10 +2680,8 @@ object EventTime {
         .when(col("event_type") === "purchase", "p")
         .when(col("event_type") === "signup", "s")
         .otherwise("e")
-      val perUser = runReplay(s, "graft_stream_replay_pattern", "complete") { s2 =>
-        s2.readStream.schema(Tables.expectedSchemas("events"))
-          .option("maxFilesPerTrigger", "2").parquet(src)
-          .select(col("user_id"), unix_micros(col("ts")).as("us"),
+      val perUser = replay(s, src, ToMemory("complete"), maxFilesPerTrigger = 2) { (_, ev) =>
+        ev.select(col("user_id"), unix_micros(col("ts")).as("us"),
             col("event_id"), ch.as("ch"))
           .groupBy("user_id")
           .agg(collect_list(struct(col("us"), col("event_id"), col("ch"))).as("evs"))
@@ -2784,11 +2765,8 @@ object EventTime {
       // this op's cost is the ~95k-session merge + emit work, which 2
       // partitions would serialize at scale, not per-batch store setup.
       // Reverted to the replay default of 8.
-      val sessions = runReplay(s, "graft_stream_replay_pattern_scale", "append") { s2 =>
-        s2.readStream.schema(Tables.expectedSchemas("events"))
-          .option("maxFilesPerTrigger", "4")
-          .parquet(src)
-          .select(col("ts"), col("user_id"), unix_micros(col("ts")).as("us"),
+      val sessions = replay(s, src, ToMemory("append"), maxFilesPerTrigger = 4) { (_, ev) =>
+        ev.select(col("ts"), col("user_id"), unix_micros(col("ts")).as("us"),
             col("event_id"), ch.as("ch"))
           .withWatermark("ts", "30 minutes")
           .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
@@ -4588,12 +4566,9 @@ WITH hourly AS (
       // same state in 4 stores/batch (the stream_replay_outer_join
       // precedent); results are partition-count invariant (the graded
       // CPUS=1-vs-32 property).
-      runReplay(s, "graft_stream_replay_chained_agg", "append",
-        Map("spark.sql.shuffle.partitions" -> "2")) { s2 =>
-        s2.readStream.schema(Tables.expectedSchemas("events"))
-          .option("maxFilesPerTrigger", "4")
-          .parquet(src)
-          .select(col("ts"), col("event_type"), dec2(col("value")).as("v"))
+      replay(s, src, ToMemory("append"), maxFilesPerTrigger = 4,
+        extraConf = Map("spark.sql.shuffle.partitions" -> "2")) { (_, ev) =>
+        ev.select(col("ts"), col("event_type"), dec2(col("value")).as("v"))
           .withWatermark("ts", "30 minutes")
           .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
           .agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
@@ -4692,11 +4667,8 @@ WITH hourly AS (
       // (state is ~40 min of events, a few thousand rows). 2 partitions
       // carry the same state in 8 stores/batch; results are
       // partition-count invariant (the graded CPUS=1-vs-32 property)
-      runReplay(s, "graft_stream_replay_outer_join", "append",
-        Map("spark.sql.shuffle.partitions" -> "2")) { s2 =>
-        val ev = s2.readStream.schema(Tables.expectedSchemas("events"))
-          .option("maxFilesPerTrigger", "4")
-          .parquet(src)
+      replay(s, src, ToMemory("append"), maxFilesPerTrigger = 4,
+        extraConf = Map("spark.sql.shuffle.partitions" -> "2")) { (_, ev) =>
         val p = ev.filter(col("event_type") === "purchase")
           .select(col("event_id").as("purchase_id"),
             col("user_id").as("p_user"), col("ts").as("p_ts"))

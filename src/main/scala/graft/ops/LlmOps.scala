@@ -1404,13 +1404,6 @@ object LlmOps {
     lbl
   }
 
-  /** Frees an eager `localCheckpoint`'s blocks (no-op for other frames);
-    * `Dataset.unpersist` misses them, the cache manager never saw them. */
-  private def releaseCheckpoint(df: DataFrame): Unit = df.queryExecution.logical match {
-    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false); ()
-    case _ => ()
-  }
-
   /** Connected components + min-label SQL suffix over a `vp(a_id, b_id)`
     * CTE — must appear under WITH RECURSIVE. */
   private def ccSqlCtes: String = """edges AS (

@@ -97,4 +97,11 @@ object Op {
     "CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * " +
       "CAST(1 - CAST(l_discount AS DECIMAL(4,2)) AS DECIMAL(4,2)) " +
       "AS DECIMAL(18,4))"
+
+  /** Frees an eager `localCheckpoint`'s blocks (no-op for other frames);
+    * `Dataset.unpersist` misses them, the cache manager never saw them. */
+  def releaseCheckpoint(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false); ()
+    case _ => ()
+  }
 }

@@ -705,25 +705,15 @@ object Relational {
     val s2 = EventTime.replaySession(s)
     val rec = (seqC: Column, opC: Column) => struct(
       seqC.as("seq"), opC.as("op"), col("status"), col("price"))
-    var state = Tables.parquet(s2, s"$log/base")
-      .select(col("o_orderkey"), rec(lit(0L), lit("U")).as("rec"))
-      .localCheckpoint(true)
-    val q = s2.readStream.schema(Tables.parquet(s2, s"$log/delta").schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$log/delta")
-      .select(col("o_orderkey"), rec(col("seq"), col("op")).as("rec"))
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        val bLatest = batch.groupBy("o_orderkey").agg(max(col("rec")).as("rec"))
-        state = state.union(bLatest).groupBy("o_orderkey")
-          .agg(max(col("rec")).as("rec")).localCheckpoint(true)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    state
+    val latest = new EventTime.LatestByKey("o_orderkey", Some(
+      Tables.parquet(s2, s"$log/base")
+        .select(col("o_orderkey"), rec(lit(0L), lit("U")).as("rec"))
+        .localCheckpoint(true)))
+    EventTime.replay(s, s"$log/delta", EventTime.EachBatch(latest.fold),
+        maxFilesPerTrigger = 1, schema = Tables.parquet(s2, s"$log/delta").schema) {
+      (_, delta) => delta.select(col("o_orderkey"), rec(col("seq"), col("op")).as("rec"))
+    }
+    latest.result
   }
 
   val streamReplayLogCatchup: Op = Op(

@@ -5,9 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Checkpoint blocks an op leaves behind per build. `llm_dedup_cluster`
   * propagates labels over three rounds, each eagerly localCheckpointed;
   * `llm_dedup_cluster_scale` checkpoints its edge list and each of its
-  * four star rounds. Only the final round feeds either result, so a
-  * build may leave that one checkpoint registered and nothing from the
-  * rounds before it (nor the edge list they read).
+  * four star rounds. The keep-latest streaming fold of
+  * `stream_replay_upsert`, `stream_replay_cdc_upsert` and
+  * `stream_replay_log_catchup` checkpoints its state after every
+  * micro-batch (and catch-up its base snapshot). Only the final round
+  * feeds each result, so a build may leave that one checkpoint
+  * registered and nothing from the rounds before it (nor the edge list
+  * they read).
   */
 class CheckpointSuite extends AnyFunSuite {
 
@@ -35,5 +39,12 @@ class CheckpointSuite extends AnyFunSuite {
 
   test("llm_dedup_cluster_scale releases its edge and star-round checkpoints") {
     assertOneCheckpointPerBuild("llm_dedup_cluster_scale")
+  }
+
+  Seq("stream_replay_upsert", "stream_replay_cdc_upsert", "stream_replay_log_catchup").foreach {
+    name =>
+      test(s"$name releases each superseded state checkpoint") {
+        assertOneCheckpointPerBuild(name)
+      }
   }
 }

@@ -1,6 +1,8 @@
 #!/usr/bin/env bash
 # The full end-of-round gate, one command (see .claude/skills/verify/SKILL.md):
-#   no newSession() outside ops.SessionClone -> compile -> ScalaTest
+#   no newSession() outside ops.SessionClone
+#   -> no streaming query started outside EventTime.replay
+#   -> compile -> ScalaTest
 #   -> Verify+DuckDB oracle at sf0.01 AND sf0.001
 #   -> partition-invariance probe (CPUS=1 vs 4, row-exact)
 #   -> one untraced perfbench run per workload (prints heap_retained_mb)
@@ -15,8 +17,22 @@ echo "== no session made inside a build =="
 # place a session is made (comment lines are not code)
 if grep -rn 'newSession()' src/main/scala/graft --include='*.scala' |
     grep -v '^src/main/scala/graft/ops/SessionArtifact.scala:' |
-    grep -vE '^[^:]+:[0-9]+:[[:space:]]*(\*|//)'; then
+    grep -vE '^[^:]+:[0-9]+:[[:space:]]*(/?\*|//)'; then
   echo "newSession() outside ops.SessionClone" >&2
+  exit 1
+fi
+
+echo "== streaming queries start only in the replay runner =="
+# EventTime.replay owns the source read, the trigger, the sink and the
+# query's start/await/stop; its lines are from `def replay[` to the
+# closing brace at its indent
+runner=src/main/scala/graft/ops/EventTime.scala
+span="$(awk '/^  private\[graft\] def replay\[/ {s = NR} s && NR > s && /^  }$/ {print s ":" NR; exit}' "$runner")"
+if grep -rnE 'readStream|Trigger\.AvailableNow|awaitTermination|foreachBatch' src/main/scala/graft --include='*.scala' |
+    grep -vE '^[^:]+:[0-9]+:[[:space:]]*(/?\*|//)' |
+    awk -F: -v f="$runner" -v span="$span" 'BEGIN {split(span, b, ":")}
+      !($1 == f && $2 >= b[1] && $2 <= b[2])' | grep .; then
+  echo "streaming query code outside EventTime.replay" >&2
   exit 1
 fi
 
