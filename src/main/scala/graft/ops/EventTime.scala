@@ -193,7 +193,12 @@ object EventTime {
     * classloader, which keys Spark's codegen cache anew, so every warm
     * replay recompiled its generated classes. No graft session adds
     * artifacts, so nothing is shared that isolation would have kept
-    * apart.
+    * apart. Local checkpoint and state-store files go through
+    * `ops.LocalFs` (`fs.AbstractFileSystem.file.impl`): without the
+    * native `libhadoop`, Hadoop's stock local file system forks a
+    * `chmod` per file and dir and a `readlink` per rename check (426
+    * processes per warm `stream_replay_dedup_within_wm` build);
+    * `LocalFs` writes the same files, checksums and renames with none.
     */
   private[graft] def replaySession(s: SparkSession,
       extraConf: Map[String, String] = Map.empty): SparkSession =
@@ -201,7 +206,8 @@ object EventTime {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.shuffle.partitions" -> "8",
       "spark.sql.streaming.maxBatchesToRetainInMemory" -> "0",
-      "spark.sql.artifact.isolation.enabled" -> "false") ++ extraConf)
+      "spark.sql.artifact.isolation.enabled" -> "false",
+      "fs.AbstractFileSystem.file.impl" -> classOf[LocalFs].getName) ++ extraConf)
 
   /** Where a replay's rows go. */
   private[graft] sealed trait ReplaySink[A]

@@ -5,7 +5,8 @@
 #   -> compile -> ScalaTest
 #   -> Verify+DuckDB oracle at sf0.01 AND sf0.001
 #   -> partition-invariance probe (CPUS=1 vs 4, row-exact)
-#   -> one untraced perfbench run per workload (prints heap_retained_mb)
+#   -> one untraced perfbench run per workload (prints latency_p90_s,
+#      throughput_qps and heap_retained_mb)
 #   -> one traced perfbench run per workload
 #   -> Bench sf0.1.
 # Exits nonzero on the first failure. ~8 min on this machine.
@@ -76,7 +77,8 @@ for w in analytics_mix ingest_mix; do
   echo "$res" | tail -n 1 | python3 -c '
 import json, sys
 m = json.loads(sys.stdin.read())["metrics"]
-print("heap_retained_mb", round(m["heap_retained_mb"]["value"], 2))'
+for k in ("latency_p90_s", "throughput_qps", "heap_retained_mb"):
+    print(k, round(m[k]["value"], 3))'
 done
 
 # the counters that do not drift between runs, per execution: every
