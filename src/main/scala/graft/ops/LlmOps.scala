@@ -2314,36 +2314,18 @@ object LlmOps {
     "llm_simsearch_topk",
     (s, dir) => {
       val e = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding").as("v"))
-      val probes = e.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("p_id"), col("v").as("pv"))
-      e.crossJoin(broadcast(probes))
+      top5PerProbe(e.crossJoin(broadcast(probePanel(e)))
         .filter(col("vec_id") =!= col("p_id"))
         .select(
           col("p_id"), col("vec_id").as("n_id"),
-          round(expr("graft_cosine(pv, v)"), 6).as("sim"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("p_id").orderBy(col("sim").desc, col("n_id"))))
-        .filter(col("rn") <= 5)
-        .select(col("p_id"), col("n_id"), col("sim"), col("rn"))
-        .orderBy("p_id", "rn")
+          round(expr("graft_cosine(pv, v)"), 6).as("sim")), col("sim").desc)
     },
-    Some("""
-      WITH e AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings
-      ), probes AS (
-        SELECT vec_id AS p_id, v AS pv FROM e WHERE vec_id % 50 = 0
-      ), sims AS (
-        SELECT p_id, vec_id AS n_id,
-          ROUND(list_sum(list_transform(list_zip(pv, v), z -> z[1] * z[2]))
-            / (sqrt(list_sum(list_transform(pv, x -> x * x)))
-               * sqrt(list_sum(list_transform(v, x -> x * x)))), 6) AS sim
+    Some(s"""
+      WITH e AS ($vecsSql
+      ), $probesSql, sims AS (
+        SELECT p_id, vec_id AS n_id, ROUND(${cosSql("pv", "v")}, 6) AS sim
         FROM probes, e WHERE vec_id != p_id
-      )
-      SELECT p_id, n_id, sim, rn
-      FROM (SELECT *, row_number() OVER (PARTITION BY p_id
-              ORDER BY sim DESC, n_id) AS rn FROM sims)
-      WHERE rn <= 5 ORDER BY p_id, rn
+      )${top5Sql("sims", "sim", "sim DESC")}
     """.stripMargin.trim))
 
   /** Approximate NN via random-hyperplane bucketing
@@ -2371,8 +2353,7 @@ object LlmOps {
         .setBucketLength(1.0).setNumHashTables(3).setSeed(42)
         .setInputCol("features").setOutputCol("hashes")
       val model = lsh.fit(e)
-      val probes = e.filter(col("vec_id") % 50 === 0)
-      model.approxSimilarityJoin(probes, e, 1.25, "dist")
+      model.approxSimilarityJoin(e.filter(isProbe), e, 1.25, "dist")
         .select(
           col("datasetA.vec_id").as("p_id"),
           col("datasetB.vec_id").as("n_id"),
@@ -2440,27 +2421,20 @@ object LlmOps {
                 bits[b * $LshDetBandBits] + bits[b * $LshDetBandBits + 1] * 2
               + bits[b * $LshDetBandBits + 2] * 4 + bits[b * $LshDetBandBits + 3] * 8)""")))
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
-      val cand = keys.filter(col("vec_id") % 50 === 0)
+      val cand = keys.filter(isProbe)
         .select(col("vec_id").as("p_id"), col("band"), col("key"))
         .join(keys.select(col("vec_id").as("n_id"), col("band"), col("key")),
           Seq("band", "key"))
         .filter(col("p_id") =!= col("n_id"))
         .select("p_id", "n_id").distinct()
-      cand
+      top5PerProbe(cand
         .join(e.select(col("vec_id").as("p_id"), col("v").as("pv")), "p_id")
         .join(e.select(col("vec_id").as("n_id"), col("v").as("nv")), "n_id")
         .select(col("p_id"), col("n_id"),
-          round(expr("graft_cosine(pv, nv)"), 6).as("sim"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("p_id").orderBy(col("sim").desc, col("n_id"))))
-        .filter(col("rn") <= 5)
-        .select(col("p_id"), col("n_id"), col("sim"), col("rn"))
-        .orderBy("p_id", "rn")
+          round(expr("graft_cosine(pv, nv)"), 6).as("sim")), col("sim").desc)
     },
     Some(s"""
-      WITH e AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings
+      WITH e AS ($vecsSql
       ), planes AS (
         SELECT p, d,
           CAST(1 - 2 * (CAST('0x' || substr(md5('hplsh:' || p || ':' || d), 1, 15) AS BIGINT) % 2) AS DOUBLE) AS s
@@ -2470,8 +2444,7 @@ object LlmOps {
         SELECT p, list(s ORDER BY d) AS sp FROM planes GROUP BY p
       ), bits AS (
         SELECT vec_id, p,
-          CASE WHEN list_sum(list_transform(list_zip(v, sp), z -> z[1] * z[2])) > 0
-            THEN 1 ELSE 0 END AS bit
+          CASE WHEN ${dotSql("v", "sp")} > 0 THEN 1 ELSE 0 END AS bit
         FROM e CROSS JOIN parr
       ), keys AS (
         SELECT vec_id, p // $LshDetBandBits AS band,
@@ -2481,20 +2454,13 @@ object LlmOps {
         SELECT DISTINCT a.vec_id AS p_id, b.vec_id AS n_id
         FROM keys a JOIN keys b
           ON a.band = b.band AND a.key = b.key AND a.vec_id != b.vec_id
-        WHERE a.vec_id % 50 = 0
+        WHERE ${probeSql("a.")}
       ), sims AS (
-        SELECT c.p_id, c.n_id,
-          ROUND(list_sum(list_transform(list_zip(pa.v, pb.v), z -> z[1] * z[2]))
-            / (sqrt(list_sum(list_transform(pa.v, x -> x * x)))
-               * sqrt(list_sum(list_transform(pb.v, x -> x * x)))), 6) AS sim
+        SELECT c.p_id, c.n_id, ROUND(${cosSql("pa.v", "pb.v")}, 6) AS sim
         FROM cand c
           JOIN e pa ON pa.vec_id = c.p_id
           JOIN e pb ON pb.vec_id = c.n_id
-      )
-      SELECT p_id, n_id, sim, rn
-      FROM (SELECT *, row_number() OVER (PARTITION BY p_id
-              ORDER BY sim DESC, n_id) AS rn FROM sims)
-      WHERE rn <= 5 ORDER BY p_id, rn
+      )${top5Sql("sims", "sim", "sim DESC")}
     """.stripMargin.trim))
 
   /** MMR DIVERSIFIED RE-RANKING — Carbonell & Goldstein 1998, the
@@ -2525,10 +2491,8 @@ object LlmOps {
     "llm_simsearch_mmr",
     (s, dir) => {
       val e = ivfVecs(s, dir)
-      val probes = e.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("p_id"), col("v").as("pv"))
       val cand10 = e.select(col("vec_id").as("n_id"), col("v").as("nv"))
-        .crossJoin(broadcast(probes))
+        .crossJoin(broadcast(probePanel(e)))
         .filter(col("n_id") =!= col("p_id"))
         .select(col("p_id"), col("n_id"), col("nv"),
           round(expr("graft_cosine(pv, nv)"), 6).as("simq"))
@@ -2611,16 +2575,9 @@ object LlmOps {
       )"""
       }.mkString(", ")
       s"""
-      WITH e AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings
-      ), probes AS (
-        SELECT vec_id AS p_id, v AS pv FROM e WHERE vec_id % 50 = 0
-      ), sims AS (
-        SELECT p.p_id, n.vec_id AS n_id,
-          ROUND(list_sum(list_transform(list_zip(p.pv, n.v), z -> z[1] * z[2]))
-            / (sqrt(list_sum(list_transform(p.pv, x -> x * x)))
-               * sqrt(list_sum(list_transform(n.v, x -> x * x)))), 6) AS simq
+      WITH e AS ($vecsSql
+      ), $probesSql, sims AS (
+        SELECT p.p_id, n.vec_id AS n_id, ROUND(${cosSql("p.pv", "n.v")}, 6) AS simq
         FROM probes p CROSS JOIN e n WHERE n.vec_id != p.p_id
       ), cand AS (
         SELECT p_id, n_id, simq FROM (
@@ -2628,9 +2585,7 @@ object LlmOps {
             ORDER BY simq DESC, n_id) AS rk FROM sims) WHERE rk <= 10
       ), ps AS (
         SELECT c1.p_id, c1.n_id AS a, c2.n_id AS b,
-          ROUND(list_sum(list_transform(list_zip(ea.v, eb.v), z -> z[1] * z[2]))
-            / (sqrt(list_sum(list_transform(ea.v, x -> x * x)))
-               * sqrt(list_sum(list_transform(eb.v, x -> x * x)))), 6) AS s
+          ROUND(${cosSql("ea.v", "eb.v")}, 6) AS s
         FROM cand c1
           JOIN cand c2 ON c2.p_id = c1.p_id AND c2.n_id != c1.n_id
           JOIN e ea ON ea.vec_id = c1.n_id
@@ -2721,6 +2676,56 @@ object LlmOps {
   private def ivfNprobe(k: Int): Int = math.max(1, (k * 7 + 15) / 16)
   private def ivfPqNprobeOf(k: Int): Int = math.max(1, (k * 9 + 15) / 16)
 
+  /** THE probe panel every vector search ranks for: the fixed,
+    * deterministic |corpus|/50 slice of vec_ids. One predicate per engine,
+    * so the Spark frame and its oracle can never probe different rows.
+    */
+  private def isProbe: Column = col("vec_id") % 50 === 0
+  private def probeSql(alias: String): String = s"${alias}vec_id % 50 = 0"
+
+  /** The probe panel of a (vec_id, v) corpus as (p_id, pv). */
+  private def probePanel(e: DataFrame): DataFrame =
+    e.filter(isProbe).select(col("vec_id").as("p_id"), col("v").as("pv"))
+
+  /** The same panel as an oracle CTE over an `e(vec_id, v)` CTE. */
+  private def probesSql: String = s"""probes AS (
+        SELECT vec_id AS p_id, v AS pv FROM e WHERE ${probeSql("")}
+      )"""
+
+  /** The exact top-5 per probe of (p_id, n_id, score) candidates, ranked
+    * by `rank` with n_id breaking ties, as (p_id, n_id, score, rn).
+    */
+  private def top5PerProbe(cand: DataFrame, rank: Column): DataFrame =
+    cand.withColumn("rn", row_number().over(
+        Window.partitionBy("p_id").orderBy(rank, col("n_id"))))
+      .filter(col("rn") <= 5)
+      .orderBy("p_id", "rn")
+
+  /** top5PerProbe's oracle tail over the candidate CTE `rel`. */
+  private def top5Sql(rel: String, score: String, rank: String): String = s"""
+      SELECT p_id, n_id, $score, rn
+      FROM (SELECT *, row_number() OVER (PARTITION BY p_id
+              ORDER BY $rank, n_id) AS rn FROM $rel)
+      WHERE rn <= 5 ORDER BY p_id, rn"""
+
+  /** The oracle's vector folds: left-to-right list sums, the same IEEE
+    * fold order as graft_cosine / graft_sqdist, so both engines agree to
+    * the last bit before any rounding.
+    */
+  private def dotSql(a: String, b: String): String =
+    s"list_sum(list_transform(list_zip($a, $b), z -> z[1] * z[2]))"
+  private def sqdistSql(a: String, b: String): String =
+    s"list_sum(list_transform(list_zip($a, $b), z -> (z[1] - z[2]) * (z[1] - z[2])))"
+  private def cosSql(a: String, b: String): String =
+    s"""${dotSql(a, b)}
+            / (sqrt(list_sum(list_transform($a, x -> x * x)))
+               * sqrt(list_sum(list_transform($b, x -> x * x))))"""
+
+  /** The embeddings as the oracle's `e(vec_id, v)` CTE body. */
+  private def vecsSql: String = """
+        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        FROM embeddings"""
+
   /** embeddings as (vec_id, v: array<double>) — float→double is exact. */
   private def ivfVecs(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir).select(col("vec_id"), dvec(col("embedding")).as("v"))
@@ -2759,6 +2764,25 @@ object LlmOps {
   private def ivfAssign(e: DataFrame, centArr: DataFrame): DataFrame =
     e.crossJoin(broadcast(centArr))
       .select(col("vec_id"), col("v"), nearestCells("v", 1)(0).as("cell"))
+
+  /** IVF probe routing: each probe's `nprobe` nearest cells, as
+    * (p_id, pv, cell) rows (|probes| × nprobe — broadcast-sized).
+    */
+  private def probeCells(probes: DataFrame, centArr: DataFrame, nprobe: Int): DataFrame =
+    probes.crossJoin(broadcast(centArr))
+      .select(col("p_id"), col("pv"), explode(nearestCells("pv", nprobe)).as("cell"))
+
+  /** probeCells as the oracle's `pc` CTE, over the `probes`, `cents` and
+    * `kk` CTEs; `np` names kk's nprobe column.
+    */
+  private def probeCellsSql(np: String): String = s"""pc AS (
+        SELECT p_id, pv, cell FROM (
+          SELECT p.p_id, p.pv, c.cell,
+            row_number() OVER (PARTITION BY p.p_id
+              ORDER BY ROUND(${sqdistSql("p.pv", "c.cvec")}, 6), c.cell) AS rn
+          FROM probes p CROSS JOIN cents c)
+        WHERE rn <= (SELECT $np FROM kk)
+      )"""
 
   /** One distributed Lloyd refinement: recenters each seed cell on the
     * per-dimension MEAN of its members. The sum runs through exact
@@ -2812,9 +2836,7 @@ object LlmOps {
   /** Shared oracle prefix: seeds → Lloyd-refined centroid table → final
     * assignment, mirroring ivfSeeds/ivfLloyd/ivfAssign step for step.
     */
-  private def ivfOracleCtes: String = ivfOracleCtesOver(
-    """SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings""")
+  private def ivfOracleCtes: String = ivfOracleCtesOver(vecsSql)
 
   /** Same fit chain over an arbitrary corpus CTE body — the
     * semantic-scale twin amplifies the corpus in-plan and refits, so
@@ -2822,8 +2844,7 @@ object LlmOps {
     * inside a GRADED query.
     */
   private def ivfOracleCtesOver(eBody: String): String = s"""
-      WITH e AS (
-        $eBody
+      WITH e AS ($eBody
       ), kk AS (
         SELECT k, (k * 7 + 15) // 16 AS np, (k * 9 + 15) // 16 AS np_pq
         FROM (SELECT GREATEST(8, LEAST(4096,
@@ -2838,8 +2859,7 @@ object LlmOps {
       ), asg0 AS (
         SELECT vec_id, v, cell FROM (
           SELECT e.vec_id, e.v, s.cell, row_number() OVER (PARTITION BY e.vec_id
-            ORDER BY ROUND(list_sum(list_transform(list_zip(e.v, s.cvec),
-              z -> (z[1] - z[2]) * (z[1] - z[2]))), 6), s.cell) AS rn
+            ORDER BY ROUND(${sqdistSql("e.v", "s.cvec")}, 6), s.cell) AS rn
           FROM e CROSS JOIN seeds s) WHERE rn = 1
       ), dims0 AS (
         SELECT cell, v, unnest(generate_series(1, len(v))) AS i FROM asg0
@@ -2852,8 +2872,7 @@ object LlmOps {
       ), asg AS (
         SELECT vec_id, v, cell FROM (
           SELECT e.vec_id, e.v, c.cell, row_number() OVER (PARTITION BY e.vec_id
-            ORDER BY ROUND(list_sum(list_transform(list_zip(e.v, c.cvec),
-              z -> (z[1] - z[2]) * (z[1] - z[2]))), 6), c.cell) AS rn
+            ORDER BY ROUND(${sqdistSql("e.v", "c.cvec")}, 6), c.cell) AS rn
           FROM e CROSS JOIN cents c) WHERE rn = 1
       )"""
 
@@ -2885,44 +2904,21 @@ object LlmOps {
       val e = ivfVecs(s, dir)
       val (cents, k) = ivfFit(s, dir)
       val centArr = ivfCentArr(cents)
-      val assigned = ivfAssign(e, centArr)
-      val probeCells = e.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("p_id"), col("v").as("pv"))
-        .crossJoin(broadcast(centArr))
-        .select(col("p_id"), col("pv"),
-          explode(nearestCells("pv", ivfNprobe(k))).as("cell"))
       // probeCells is |probes|×nprobe rows — broadcast it so the corpus
       // side never shuffles; candidates then rank top-5 per probe
-      assigned.join(broadcast(probeCells), "cell")
+      top5PerProbe(ivfAssign(e, centArr)
+        .join(broadcast(probeCells(probePanel(e), centArr, ivfNprobe(k))), "cell")
         .filter(col("vec_id") =!= col("p_id"))
         .select(col("p_id"), col("vec_id").as("n_id"),
-          round(sqrt(sqdist(col("pv"), col("v"))), 6).as("dist"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("p_id").orderBy(col("dist"), col("n_id"))))
-        .filter(col("rn") <= 5)
-        .select(col("p_id"), col("n_id"), col("dist"), col("rn"))
-        .orderBy("p_id", "rn")
+          round(sqrt(sqdist(col("pv"), col("v"))), 6).as("dist")), col("dist"))
     },
     Some(s"""$ivfOracleCtes
-      , pc AS (
-        SELECT p_id, pv, cell FROM (
-          SELECT p.vec_id AS p_id, p.v AS pv, c.cell,
-            row_number() OVER (PARTITION BY p.vec_id
-              ORDER BY ROUND(list_sum(list_transform(list_zip(p.v, c.cvec),
-                z -> (z[1] - z[2]) * (z[1] - z[2]))), 6), c.cell) AS rn
-          FROM e p CROSS JOIN cents c WHERE p.vec_id % 50 = 0)
-        WHERE rn <= (SELECT np FROM kk)
-      ), cand AS (
+      , $probesSql, ${probeCellsSql("np")}, cand AS (
         SELECT pc.p_id, a.vec_id AS n_id,
-          ROUND(sqrt(list_sum(list_transform(list_zip(pc.pv, a.v),
-            z -> (z[1] - z[2]) * (z[1] - z[2])))), 6) AS dist
+          ROUND(sqrt(${sqdistSql("pc.pv", "a.v")}), 6) AS dist
         FROM pc JOIN asg a USING (cell)
         WHERE a.vec_id != pc.p_id
-      )
-      SELECT p_id, n_id, dist, rn
-      FROM (SELECT *, row_number() OVER (PARTITION BY p_id
-              ORDER BY dist, n_id) AS rn FROM cand)
-      WHERE rn <= 5 ORDER BY p_id, rn
+      )${top5Sql("cand", "dist", "dist")}
     """.stripMargin.trim))
 
   /** EMBEDDING-SPACE OUTLIER SCREEN — the data-cleaning read of the
@@ -2966,8 +2962,7 @@ object LlmOps {
     Some(s"""$ivfOracleCtes
       , d AS (
         SELECT a.vec_id, a.cell,
-          ROUND(sqrt(list_sum(list_transform(list_zip(a.v, c.cvec),
-            z -> (z[1] - z[2]) * (z[1] - z[2])))), 6) AS dist
+          ROUND(sqrt(${sqdistSql("a.v", "c.cvec")}), 6) AS dist
         FROM asg a JOIN cents c ON c.cell = a.cell
       )
       SELECT CAST(rank AS BIGINT) AS rank, vec_id, cell, dist
@@ -3018,6 +3013,11 @@ object LlmOps {
   private def pqJs(s: org.apache.spark.sql.SparkSession): DataFrame =
     s.range(0, PqM).select(col("id").cast(IntegerType).as("j"))
 
+  /** Subspace j's PqSub components of the vector column `v`. */
+  private def pqSlice(v: String): Column = expr(s"slice($v, j * $PqSub + 1, $PqSub)")
+  private def pqSliceSql(v: String, j: String): String =
+    s"list_slice($v, $j * $PqSub + 1, $j * $PqSub + $PqSub)"
+
   /** The fitted product quantizer — (codebook, codes) — computed ONCE
     * per (session, fixture): the ivfCents shape. A deployment persists
     * both; every search pays only LUT + ADC + re-rank (measured
@@ -3033,12 +3033,10 @@ object LlmOps {
           md5(concat(lit("pq:"), col("vec_id").cast(StringType))).as("hkey"))
         .orderBy("hkey", "cell").limit(PqKs)
       val cb0 = seeds.crossJoin(broadcast(js))
-        .select(col("j"), col("cell"),
-          expr(s"slice(cvec, j * $PqSub + 1, $PqSub)").as("csub"))
+        .select(col("j"), col("cell"), pqSlice("cvec").as("csub"))
       // 3 consumers (seed assign, Lloyd member join, encode) — one pass
       val subs = e.crossJoin(broadcast(js))
-        .select(col("vec_id"), col("j"),
-          expr(s"slice(v, j * $PqSub + 1, $PqSub)").as("subv"))
+        .select(col("vec_id"), col("j"), pqSlice("v").as("subv"))
         .localCheckpoint(true)
       // nearest sub-centroid per (vector, subspace): agg-min on the
       // (rounded sqdist, cell) struct — partial aggregates map-side,
@@ -3077,19 +3075,16 @@ object LlmOps {
         FROM e ORDER BY md5('pq:' || CAST(vec_id AS VARCHAR)), vec_id
         LIMIT $PqKs
       ), pq_cb0 AS (
-        SELECT j, cell,
-          list_slice(cvec, j * $PqSub + 1, j * $PqSub + $PqSub) AS csub
+        SELECT j, cell, ${pqSliceSql("cvec", "j")} AS csub
         FROM pq_seeds, js
       ), pq_subs AS (
-        SELECT vec_id, j,
-          list_slice(v, j * $PqSub + 1, j * $PqSub + $PqSub) AS subv
+        SELECT vec_id, j, ${pqSliceSql("v", "j")} AS subv
         FROM e, js
       ), pq_asg0 AS (
         SELECT vec_id, j, cell FROM (
           SELECT s.vec_id, s.j, c.cell,
             row_number() OVER (PARTITION BY s.vec_id, s.j
-              ORDER BY ROUND(list_sum(list_transform(list_zip(s.subv, c.csub),
-                z -> (z[1] - z[2]) * (z[1] - z[2]))), 6), c.cell) AS rn
+              ORDER BY ROUND(${sqdistSql("s.subv", "c.csub")}, 6), c.cell) AS rn
           FROM pq_subs s JOIN pq_cb0 c ON c.j = s.j) WHERE rn = 1
       ), pq_dims0 AS (
         SELECT a.j, a.cell, s.subv,
@@ -3105,87 +3100,100 @@ object LlmOps {
         SELECT vec_id, j, cell AS code FROM (
           SELECT s.vec_id, s.j, c.cell,
             row_number() OVER (PARTITION BY s.vec_id, s.j
-              ORDER BY ROUND(list_sum(list_transform(list_zip(s.subv, c.csub),
-                z -> (z[1] - z[2]) * (z[1] - z[2]))), 6), c.cell) AS rn
+              ORDER BY ROUND(${sqdistSql("s.subv", "c.csub")}, 6), c.cell) AS rn
           FROM pq_subs s JOIN cb c ON c.j = s.j) WHERE rn = 1
-      ), probes AS (
-        SELECT vec_id AS p_id, v AS pv FROM e WHERE vec_id % 50 = 0
-      ), lut AS (
+      ), $probesSql, lut AS (
         SELECT p.p_id, c.j, c.cell,
-          CAST(ROUND(list_sum(list_transform(
-            list_zip(list_slice(p.pv, c.j * $PqSub + 1, c.j * $PqSub + $PqSub),
-                     c.csub),
-            z -> (z[1] - z[2]) * (z[1] - z[2]))), 8) AS DECIMAL(20,8)) AS pd
+          CAST(ROUND(${sqdistSql(pqSliceSql("p.pv", "c.j"), "c.csub")}, 8)
+            AS DECIMAL(20,8)) AS pd
         FROM probes p, cb c
       )"""
 
-  /** Shared oracle tail: ADC top-$PqShortlist shortlist → exact re-rank
-    * top-5. Expects an `adc(p_id, vec_id, adc)` CTE in scope.
+  /** The PQ search: per probe, the (subspace, code) → partial-sqdist
+    * LUT against the codebook, the ADC fold (the sum of a candidate's 16
+    * LUT entries), the ADC top-$PqShortlist shortlist and its exact
+    * re-rank to the top 5, as (p_id, n_id, dist, rn). `route` =
+    * (centroid array, nprobe) restricts the ADC to the codes in each
+    * probe's nprobe nearest IVF cells.
     */
-  private def pqShortRerankSql: String = s"""
-      , short AS (
+  private def pqSearch(e: DataFrame, cb: DataFrame, codes: DataFrame,
+      route: Option[(DataFrame, Int)]): DataFrame = {
+    val probes = probePanel(e)
+    val lut = probes.crossJoin(broadcast(pqJs(e.sparkSession)))
+      .select(col("p_id"), col("j"), pqSlice("pv").as("psub"))
+      .join(broadcast(cb), "j")
+      .select(col("p_id"), col("j"), col("cell").as("code"),
+        round(sqdist(col("psub"), col("csub")), 8)
+          .cast(DecimalType(20, 8)).as("pd"))
+    val scored = route match {
+      case None => codes.join(broadcast(lut), Seq("j", "code"))
+      case Some((centArr, nprobe)) =>
+        // the inverted-list layout: codes tagged with their IVF cell
+        // (production stores codes cell-partitioned; the tag join is the
+        // fixture stand-in), then ONLY probed cells' codes ADC-score.
+        // r22 (guide §3.1): the codes ⋈ cell-tag equi-join defaulted to
+        // SortMergeJoin (derived sides, no stats) — a shuffled-hash join
+        // skips both sorts. Precondition: the build side holds one
+        // cell-tag row per vector, held in memory per shuffle partition,
+        // so it stays bounded only while the shuffle partition count
+        // grows with the corpus; at a fixed count it grows linearly
+        // with N.
+        val cellOf = ivfAssign(e, centArr).select(col("vec_id"), col("cell"))
+        codes.join(cellOf.hint("SHUFFLE_HASH"), "vec_id")
+          .join(broadcast(probeCells(probes, centArr, nprobe).drop("pv")), "cell")
+          .join(broadcast(lut), Seq("p_id", "j", "code"))
+    }
+    val short = scored.filter(col("vec_id") =!= col("p_id"))
+      .groupBy("p_id", "vec_id")
+      .agg(sum("pd").as("adc"))
+      .withColumn("srn", row_number().over(
+        Window.partitionBy("p_id").orderBy(col("adc"), col("vec_id"))))
+      .filter(col("srn") <= PqShortlist)
+      .select("p_id", "vec_id")
+    top5PerProbe(short.join(e, "vec_id")
+      .join(broadcast(probes), "p_id")
+      .select(col("p_id"), col("vec_id").as("n_id"),
+        round(sqrt(sqdist(col("pv"), col("v"))), 6).as("dist")), col("dist"))
+  }
+
+  /** pqSearch's oracle: the SHARED pqChainSql fit and LUT, then the ADC,
+    * shortlist and re-rank; a routed search splices the IVF chain and
+    * joins the ADC to the probed cells' codes.
+    */
+  private def pqSearchSql(routed: Boolean): String = {
+    val (head, pc, routedJoin) =
+      if (routed) (ivfOracleCtes, s", ${probeCellsSql("np_pq")}", """
+          JOIN asg a ON a.vec_id = k.vec_id
+          JOIN pc ON pc.cell = a.cell AND pc.p_id = l.p_id""")
+      else (s"""
+      WITH e AS ($vecsSql
+      )""", "", "")
+    (head + pqChainSql + pc + s"""
+      , adc AS (
+        SELECT l.p_id, k.vec_id, SUM(l.pd) AS adc
+        FROM codes k JOIN lut l ON l.j = k.j AND l.cell = k.code$routedJoin
+        WHERE k.vec_id != l.p_id
+        GROUP BY 1, 2
+      ), short AS (
         SELECT p_id, vec_id FROM (
           SELECT p_id, vec_id, row_number() OVER (PARTITION BY p_id
             ORDER BY adc, vec_id) AS srn FROM adc) WHERE srn <= $PqShortlist
-      )
-      SELECT p_id, n_id, dist, rn FROM (
+      ), rr AS (
         SELECT sh.p_id, sh.vec_id AS n_id,
-          ROUND(sqrt(list_sum(list_transform(list_zip(p.pv, e.v),
-            z -> (z[1] - z[2]) * (z[1] - z[2])))), 6) AS dist,
-          row_number() OVER (PARTITION BY sh.p_id
-            ORDER BY ROUND(sqrt(list_sum(list_transform(list_zip(p.pv, e.v),
-              z -> (z[1] - z[2]) * (z[1] - z[2])))), 6), sh.vec_id) AS rn
+          ROUND(sqrt(${sqdistSql("p.pv", "e.v")}), 6) AS dist
         FROM short sh
           JOIN e ON e.vec_id = sh.vec_id
           JOIN probes p ON p.p_id = sh.p_id
-      ) WHERE rn <= 5 ORDER BY p_id, rn"""
+      )${top5Sql("rr", "dist", "dist")}""").trim
+  }
 
   val llmSimsearchPq: Op = Op(
     "llm_simsearch_pq",
     (s, dir) => {
-      val e = ivfVecs(s, dir)
-      val js = pqJs(s)
       val (cb, codes) = pqFit(s, dir)
-      val probes = e.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("p_id"), col("v").as("pv"))
-      val lut = probes.crossJoin(broadcast(js))
-        .select(col("p_id"), col("j"),
-          expr(s"slice(pv, j * $PqSub + 1, $PqSub)").as("psub"))
-        .join(broadcast(cb), "j")
-        .select(col("p_id"), col("j"), col("cell"),
-          round(sqdist(col("psub"), col("csub")), 8)
-            .cast(DecimalType(20, 8)).as("pd"))
-      val adc = codes.join(broadcast(lut),
-          codes("j") === lut("j") && codes("code") === lut("cell"))
-        .filter(col("vec_id") =!= col("p_id"))
-        .groupBy("p_id", "vec_id")
-        .agg(sum("pd").as("adc"))
-      val short = adc
-        .withColumn("srn", row_number().over(
-          Window.partitionBy("p_id").orderBy(col("adc"), col("vec_id"))))
-        .filter(col("srn") <= PqShortlist)
-        .select("p_id", "vec_id")
-      short.join(e, "vec_id")
-        .join(broadcast(probes), "p_id")
-        .select(col("p_id"), col("vec_id").as("n_id"),
-          round(sqrt(sqdist(col("pv"), col("v"))), 6).as("dist"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("p_id").orderBy(col("dist"), col("n_id"))))
-        .filter(col("rn") <= 5)
-        .select(col("p_id"), col("n_id"), col("dist"), col("rn"))
-        .orderBy("p_id", "rn")
+      pqSearch(ivfVecs(s, dir), cb, codes, None)
     },
-    Some((s"""
-      WITH e AS (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings
-      )""" + pqChainSql + s"""
-      , adc AS (
-        SELECT l.p_id, k.vec_id, SUM(l.pd) AS adc
-        FROM codes k JOIN lut l ON l.j = k.j AND l.cell = k.code
-        WHERE k.vec_id != l.p_id
-        GROUP BY 1, 2
-      )""" + pqShortRerankSql).trim))
+    Some(pqSearchSql(routed = false)))
 
   /** IVF-PQ COMPOSED ANN — the production FAISS shape: IVF PARTITIONS
     * the corpus (probe the nprobe nearest cells — reuses the shared
@@ -3215,73 +3223,11 @@ object LlmOps {
   val llmSimsearchIvfpq: Op = Op(
     "llm_simsearch_ivfpq",
     (s, dir) => {
-      val e = ivfVecs(s, dir)
-      val js = pqJs(s)
-      val (cents, ivfKFit) = ivfFit(s, dir)
-      val centArr = ivfCentArr(cents)
-      val cellOf = ivfAssign(e, centArr).select(col("vec_id"), col("cell"))
+      val (cents, k) = ivfFit(s, dir)
       val (cb, codes) = pqFit(s, dir)
-      val probes = e.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("p_id"), col("v").as("pv"))
-      val probeCells = probes.crossJoin(broadcast(centArr))
-        .select(col("p_id"),
-          explode(nearestCells("pv", ivfPqNprobeOf(ivfKFit))).as("cell"))
-      val lut = probes.crossJoin(broadcast(js))
-        .select(col("p_id"), col("j"),
-          expr(s"slice(pv, j * $PqSub + 1, $PqSub)").as("psub"))
-        .join(broadcast(cb), "j")
-        .select(col("p_id"), col("j"), col("cell").as("code"),
-          round(sqdist(col("psub"), col("csub")), 8)
-            .cast(DecimalType(20, 8)).as("pd"))
-      // the inverted-list layout: codes tagged with their IVF cell
-      // (production stores codes cell-partitioned; the tag join is the
-      // fixture stand-in), then ONLY probed cells' codes ADC-score
-      // r22 (guide §3.1): the codes ⋈ cellOf equi-join defaulted to
-      // SortMergeJoin (derived sides, no stats) — a shuffled-hash join
-      // skips both sorts. Precondition: the build side holds one
-      // cell-tag row per vector, held in memory per shuffle partition,
-      // so it stays bounded only while the shuffle partition count
-      // grows with the corpus; at a fixed count it grows linearly
-      // with N. (sink_model_artifact_search repeats this hint.)
-      val adc = codes.join(cellOf.hint("SHUFFLE_HASH"), "vec_id")
-        .join(broadcast(probeCells), "cell")
-        .filter(col("vec_id") =!= col("p_id"))
-        .join(broadcast(lut), Seq("p_id", "j", "code"))
-        .groupBy("p_id", "vec_id")
-        .agg(sum("pd").as("adc"))
-      val short = adc
-        .withColumn("srn", row_number().over(
-          Window.partitionBy("p_id").orderBy(col("adc"), col("vec_id"))))
-        .filter(col("srn") <= PqShortlist)
-        .select("p_id", "vec_id")
-      short.join(e, "vec_id")
-        .join(broadcast(probes), "p_id")
-        .select(col("p_id"), col("vec_id").as("n_id"),
-          round(sqrt(sqdist(col("pv"), col("v"))), 6).as("dist"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("p_id").orderBy(col("dist"), col("n_id"))))
-        .filter(col("rn") <= 5)
-        .select(col("p_id"), col("n_id"), col("dist"), col("rn"))
-        .orderBy("p_id", "rn")
+      pqSearch(ivfVecs(s, dir), cb, codes, Some((ivfCentArr(cents), ivfPqNprobeOf(k))))
     },
-    Some((ivfOracleCtes + pqChainSql + s"""
-      , pc AS (
-        SELECT p_id, cell FROM (
-          SELECT p.p_id, c.cell,
-            row_number() OVER (PARTITION BY p.p_id
-              ORDER BY ROUND(list_sum(list_transform(list_zip(p.pv, c.cvec),
-                z -> (z[1] - z[2]) * (z[1] - z[2]))), 6), c.cell) AS rn
-          FROM probes p CROSS JOIN cents c)
-        WHERE rn <= (SELECT np_pq FROM kk)
-      ), adc AS (
-        SELECT pc.p_id, k.vec_id, SUM(l.pd) AS adc
-        FROM pc
-          JOIN asg a ON a.cell = pc.cell
-          JOIN codes k ON k.vec_id = a.vec_id
-          JOIN lut l ON l.p_id = pc.p_id AND l.j = k.j AND l.cell = k.code
-        WHERE k.vec_id != pc.p_id
-        GROUP BY 1, 2
-      )""" + pqShortRerankSql).trim))
+    Some(pqSearchSql(routed = true)))
 
   /** IVF-bucketed SEMANTIC dedup — near-dup detection in true embedding
     * space (llm_dedup_embed works on hashed-BoW term vectors; this op
@@ -3322,55 +3268,61 @@ object LlmOps {
       val planted = e.filter(col("vec_id") % 25 === 0)
         .select((col("vec_id") + 100000L).as("vec_id"),
           transform(col("v"), x => x * 0.9 + 0.01).as("v"))
-      // both consumed repeatedly — aug by the assignment and BOTH sims
-      // joins, asg by both sides of the candidate self-join — so each
+      // aug feeds the assignment and BOTH verify joins, so it
       // materializes once (the llm_ngram_novelty round-11 treatment;
-      // without this the broadcast-centroid assignment ran twice and
-      // the augmented scan three times)
-      val aug = e.unionByName(planted).localCheckpoint(true)
-      val centArr = ivfCentArr(ivfCents(s, dir))
-      val asg = aug.crossJoin(broadcast(centArr))
-        .select(col("vec_id"), explode(nearestCells("v", 2)).as("cell"))
-        .localCheckpoint(true)
-      val cand = asg.as("a")
-        .join(asg.as("b"),
-          col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-        .distinct()
-      val sims = cand
-        .join(aug.select(col("vec_id").as("a_id"), col("v").as("av")), "a_id")
-        .join(aug.select(col("vec_id").as("b_id"), col("v").as("bv")), "b_id")
-        .select(col("a_id"), col("b_id"), expr("graft_cosine(av, bv)").as("cs"))
-      sims.filter(col("cs") >= 0.9)
-        .select(col("a_id"), col("b_id"), round(col("cs"), 6).as("cos_sim"))
-        .orderBy("a_id", "b_id")
+      // without this the augmented scan ran three times)
+      semanticPairs(e.unionByName(planted).localCheckpoint(true), ivfCents(s, dir))
     },
-    Some(s"""$ivfOracleCtes
+    Some((s"""$ivfOracleCtes
       , aug AS (
         SELECT vec_id, v FROM e
         UNION ALL
         SELECT vec_id + 100000, list_transform(v, x -> 0.9 * x + 0.01)
         FROM e WHERE vec_id % 25 = 0
-      ), masg AS (
+      )""" + semanticPairsSql("aug")).trim))
+
+  /** The cell-blocked pair search both semantic-dedup ops run: every
+    * vector of `vecs` (vec_id, v) tags its 2 nearest cells of `cents`,
+    * candidate pairs form only within a cell, and exact cosine ≥ 0.9
+    * verifies them, as (a_id, b_id, cos_sim). `vecs` feeds the
+    * assignment and both verify joins, so callers pass it materialized.
+    */
+  private def semanticPairs(vecs: DataFrame, cents: DataFrame): DataFrame = {
+    // asg feeds both sides of the candidate self-join — materialized once
+    val asg = vecs.crossJoin(broadcast(ivfCentArr(cents)))
+      .select(col("vec_id"), explode(nearestCells("v", 2)).as("cell"))
+      .localCheckpoint(true)
+    val cand = asg.as("a")
+      .join(asg.as("b"),
+        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
+      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
+      .distinct()
+    cand
+      .join(vecs.select(col("vec_id").as("a_id"), col("v").as("av")), "a_id")
+      .join(vecs.select(col("vec_id").as("b_id"), col("v").as("bv")), "b_id")
+      .select(col("a_id"), col("b_id"), expr("graft_cosine(av, bv)").as("cs"))
+      .filter(col("cs") >= 0.9)
+      .select(col("a_id"), col("b_id"), round(col("cs"), 6).as("cos_sim"))
+      .orderBy("a_id", "b_id")
+  }
+
+  /** semanticPairs' oracle over the corpus CTE `rel` and a `cents` CTE. */
+  private def semanticPairsSql(rel: String): String = s"""
+      , masg AS (
         SELECT vec_id, cell FROM (
           SELECT a.vec_id, c.cell, row_number() OVER (PARTITION BY a.vec_id
-            ORDER BY ROUND(list_sum(list_transform(list_zip(a.v, c.cvec),
-              z -> (z[1] - z[2]) * (z[1] - z[2]))), 6), c.cell) AS rn
-          FROM aug a CROSS JOIN cents c) WHERE rn <= 2
+            ORDER BY ROUND(${sqdistSql("a.v", "c.cvec")}, 6), c.cell) AS rn
+          FROM $rel a CROSS JOIN cents c) WHERE rn <= 2
       ), cand AS (
         SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
         FROM masg a JOIN masg b ON a.cell = b.cell AND a.vec_id < b.vec_id
       ), sims AS (
-        SELECT c.a_id, c.b_id,
-          list_sum(list_transform(list_zip(x.v, y.v), z -> z[1] * z[2])) /
-            (sqrt(list_sum(list_transform(x.v, t -> t * t))) *
-             sqrt(list_sum(list_transform(y.v, t -> t * t)))) AS cs
-        FROM cand c JOIN aug x ON x.vec_id = c.a_id
-                    JOIN aug y ON y.vec_id = c.b_id
+        SELECT c.a_id, c.b_id, ${cosSql("x.v", "y.v")} AS cs
+        FROM cand c JOIN $rel x ON x.vec_id = c.a_id
+                    JOIN $rel y ON y.vec_id = c.b_id
       )
       SELECT a_id, b_id, ROUND(cs, 6) AS cos_sim
-      FROM sims WHERE cs >= 0.9 ORDER BY a_id, b_id
-    """.stripMargin.trim))
+      FROM sims WHERE cs >= 0.9 ORDER BY a_id, b_id"""
 
   /** The ×4-amplified corpus + its OWN adaptive-k fit for the
     * semantic-scale twin, cached per (session, dir) and prewarmed like
@@ -3438,43 +3390,9 @@ object LlmOps {
     "llm_dedup_semantic_scale",
     (s, dir) => {
       val (aug, cents) = semScaleFit(s, dir)
-      val asg = aug.crossJoin(broadcast(ivfCentArr(cents)))
-        .select(col("vec_id"), explode(nearestCells("v", 2)).as("cell"))
-        .localCheckpoint(true)
-      val cand = asg.as("a")
-        .join(asg.as("b"),
-          col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-        .distinct()
-      val sims = cand
-        .join(aug.select(col("vec_id").as("a_id"), col("v").as("av")), "a_id")
-        .join(aug.select(col("vec_id").as("b_id"), col("v").as("bv")), "b_id")
-        .select(col("a_id"), col("b_id"), expr("graft_cosine(av, bv)").as("cs"))
-      sims.filter(col("cs") >= 0.9)
-        .select(col("a_id"), col("b_id"), round(col("cs"), 6).as("cos_sim"))
-        .orderBy("a_id", "b_id")
+      semanticPairs(aug, cents)
     },
-    Some((ivfOracleCtesOver(semScaleOracleE) + s"""
-      , masg AS (
-        SELECT vec_id, cell FROM (
-          SELECT a.vec_id, c.cell, row_number() OVER (PARTITION BY a.vec_id
-            ORDER BY ROUND(list_sum(list_transform(list_zip(a.v, c.cvec),
-              z -> (z[1] - z[2]) * (z[1] - z[2]))), 6), c.cell) AS rn
-          FROM e a CROSS JOIN cents c) WHERE rn <= 2
-      ), cand AS (
-        SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
-        FROM masg a JOIN masg b ON a.cell = b.cell AND a.vec_id < b.vec_id
-      ), sims AS (
-        SELECT c.a_id, c.b_id,
-          list_sum(list_transform(list_zip(x.v, y.v), z -> z[1] * z[2])) /
-            (sqrt(list_sum(list_transform(x.v, t -> t * t))) *
-             sqrt(list_sum(list_transform(y.v, t -> t * t)))) AS cs
-        FROM cand c JOIN e x ON x.vec_id = c.a_id
-                    JOIN e y ON y.vec_id = c.b_id
-      )
-      SELECT a_id, b_id, ROUND(cs, 6) AS cos_sim
-      FROM sims WHERE cs >= 0.9 ORDER BY a_id, b_id
-    """).trim))
+    Some((ivfOracleCtesOver(semScaleOracleE) + semanticPairsSql("e")).trim))
 
   /** PII scrubbing — the redaction pass a released corpus runs last:
     * regex-detect emails and phone-shaped numbers, replace with typed
@@ -5474,69 +5392,14 @@ object LlmOps {
     "sink_model_artifact_search",
     (s, dir) => {
       val p = modelStore(s, dir)
-      val e = ivfVecs(s, dir)
-      val js = pqJs(s)
-      val storedCents = Tables.parquet(s, s"$p/ivf_centroids")
+      val cents = Tables.parquet(s, s"$p/ivf_centroids")
       // serving derives nprobe from the ARTIFACT's own cell count — the
       // store is self-describing, no fit-time scalar needs persisting
-      val kStored = storedCents.count().toInt
-      val centArr = ivfCentArr(storedCents)
-      val cellOf = ivfAssign(e, centArr).select(col("vec_id"), col("cell"))
-      val cb = Tables.parquet(s, s"$p/pq_codebook")
-      val codes = Tables.parquet(s, s"$p/pq_codes")
-      val probes = e.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("p_id"), col("v").as("pv"))
-      val probeCells = probes.crossJoin(broadcast(centArr))
-        .select(col("p_id"),
-          explode(nearestCells("pv", ivfPqNprobeOf(kStored))).as("cell"))
-      val lut = probes.crossJoin(broadcast(js))
-        .select(col("p_id"), col("j"),
-          expr(s"slice(pv, j * $PqSub + 1, $PqSub)").as("psub"))
-        .join(broadcast(cb), "j")
-        .select(col("p_id"), col("j"), col("cell").as("code"),
-          round(sqdist(col("psub"), col("csub")), 8)
-            .cast(DecimalType(20, 8)).as("pd"))
-      // llm_simsearch_ivfpq's shuffled-hash join, under the same
-      // partition-count precondition (stated there)
-      val adc = codes.join(cellOf.hint("SHUFFLE_HASH"), "vec_id")
-        .join(broadcast(probeCells), "cell")
-        .filter(col("vec_id") =!= col("p_id"))
-        .join(broadcast(lut), Seq("p_id", "j", "code"))
-        .groupBy("p_id", "vec_id")
-        .agg(sum("pd").as("adc"))
-      val short = adc
-        .withColumn("srn", row_number().over(
-          Window.partitionBy("p_id").orderBy(col("adc"), col("vec_id"))))
-        .filter(col("srn") <= PqShortlist)
-        .select("p_id", "vec_id")
-      short.join(e, "vec_id")
-        .join(broadcast(probes), "p_id")
-        .select(col("p_id"), col("vec_id").as("n_id"),
-          round(sqrt(sqdist(col("pv"), col("v"))), 6).as("dist"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("p_id").orderBy(col("dist"), col("n_id"))))
-        .filter(col("rn") <= 5)
-        .select(col("p_id"), col("n_id"), col("dist"), col("rn"))
-        .orderBy("p_id", "rn")
+      val nprobe = ivfPqNprobeOf(cents.count().toInt)
+      pqSearch(ivfVecs(s, dir), Tables.parquet(s, s"$p/pq_codebook"),
+        Tables.parquet(s, s"$p/pq_codes"), Some((ivfCentArr(cents), nprobe)))
     },
-    Some((ivfOracleCtes + pqChainSql + s"""
-      , pc AS (
-        SELECT p_id, cell FROM (
-          SELECT p.p_id, c.cell,
-            row_number() OVER (PARTITION BY p.p_id
-              ORDER BY ROUND(list_sum(list_transform(list_zip(p.pv, c.cvec),
-                z -> (z[1] - z[2]) * (z[1] - z[2]))), 6), c.cell) AS rn
-          FROM probes p CROSS JOIN cents c)
-        WHERE rn <= (SELECT np_pq FROM kk)
-      ), adc AS (
-        SELECT pc.p_id, k.vec_id, SUM(l.pd) AS adc
-        FROM pc
-          JOIN asg a ON a.cell = pc.cell
-          JOIN codes k ON k.vec_id = a.vec_id
-          JOIN lut l ON l.p_id = pc.p_id AND l.j = k.j AND l.cell = k.code
-        WHERE k.vec_id != pc.p_id
-        GROUP BY 1, 2
-      )""" + pqShortRerankSql).trim))
+    llmSimsearchIvfpq.oracle)
 
   /** ARTIFACT REFRESH PROTOCOL — the lifecycle step the adaptive-k fit
     * makes mandatory (r18 verdict #8a): when the corpus grows, the
@@ -5706,7 +5569,7 @@ object LlmOps {
     (s, dir) => {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label"), col("embedding").as("v"))
-      val anchors = e.filter(col("vec_id") % 50 === 0)
+      val anchors = e.filter(isProbe)
         .select(col("vec_id").as("a_id"), col("label").as("a_label"),
           col("v").as("av"))
       e.crossJoin(broadcast(anchors))
@@ -5728,19 +5591,17 @@ object LlmOps {
             .as("r_at_10"))
         .orderBy("a_id")
     },
-    Some("""
+    Some(s"""
       WITH e AS (
         SELECT vec_id, label,
           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
         FROM embeddings
       ), a AS (
         SELECT vec_id AS a_id, label AS a_label, v AS av
-        FROM e WHERE vec_id % 50 = 0
+        FROM e WHERE ${probeSql("")}
       ), sims AS (
         SELECT a_id, a_label, vec_id AS n_id,
-          ROUND(list_sum(list_transform(list_zip(av, v), z -> z[1] * z[2]))
-            / (sqrt(list_sum(list_transform(av, x -> x * x)))
-               * sqrt(list_sum(list_transform(v, x -> x * x)))), 6) AS sim,
+          ROUND(${cosSql("av", "v")}, 6) AS sim,
           CASE WHEN label = a_label THEN 1 ELSE 0 END AS rel
         FROM a, e WHERE vec_id != a_id
       ), ranked AS (
@@ -5766,7 +5627,7 @@ object LlmOps {
     (s, dir) => {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label"), col("embedding").as("v"))
-      val anchors = e.filter(col("vec_id") % 50 === 0)
+      val anchors = e.filter(isProbe)
         .select(col("vec_id").as("a_id"), col("label").as("a_label"),
           col("v").as("av"))
       val sims = e.crossJoin(broadcast(anchors))
@@ -5787,19 +5648,17 @@ object LlmOps {
         .select(col("a_id"), col("role"), col("rnk"), col("n_id"), col("sim"))
         .orderBy("a_id", "role", "rnk")
     },
-    Some("""
+    Some(s"""
       WITH e AS (
         SELECT vec_id, label,
           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
         FROM embeddings
       ), a AS (
         SELECT vec_id AS a_id, label AS a_label, v AS av
-        FROM e WHERE vec_id % 50 = 0
+        FROM e WHERE ${probeSql("")}
       ), sims AS (
         SELECT a_id, a_label, vec_id AS n_id, label,
-          ROUND(list_sum(list_transform(list_zip(av, v), z -> z[1] * z[2]))
-            / (sqrt(list_sum(list_transform(av, x -> x * x)))
-               * sqrt(list_sum(list_transform(v, x -> x * x)))), 6) AS sim
+          ROUND(${cosSql("av", "v")}, 6) AS sim
         FROM a, e WHERE vec_id != a_id
       ), pos AS (
         SELECT a_id, 'hard_pos' AS role, CAST(rnk AS INT) AS rnk, n_id, sim FROM (

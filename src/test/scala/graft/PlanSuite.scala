@@ -583,6 +583,26 @@ class PlanSuite extends AnyFunSuite {
       s"expected ONE event_type exchange shared by the lag window and the percentile agg: $hashEx")
   }
 
+  test("llm_simsearch_ivfpq and sink_model_artifact_search hash-join the codes to their cell tags") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    def unwrap(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
+      case other => other
+    }
+    // the codes ⋈ cell-tag join is the one vec_id-keyed join the
+    // SHUFFLE_HASH hint reaches; unhinted it plans a SortMergeJoin
+    Seq("llm_simsearch_ivfpq", "sink_model_artifact_search").foreach { name =>
+      val root = unwrap(SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
+      val shj = root.collect {
+        case j: ShuffledHashJoinExec
+            if (j.leftKeys ++ j.rightKeys).exists(_.toString.startsWith("vec_id#")) => j
+      }
+      assert(shj.nonEmpty, s"$name: no ShuffledHashJoin on vec_id:\n$root")
+    }
+  }
+
   test("no CartesianProduct/BroadcastNestedLoopJoin outside the whitelist") {
     val allowed = Set("join_cross", "join_theta_range", "llm_simsearch_topk",
       // three 1-row broadcast crossJoins (in-plan-N): the corpus count

@@ -2,6 +2,7 @@
 # The full end-of-round gate, one command (see .claude/skills/verify/SKILL.md):
 #   no newSession() outside ops.SessionClone
 #   -> no streaming query started outside EventTime.replay
+#   -> no vec_id % 50 probe predicate outside LlmOps' probe panel
 #   -> compile -> ScalaTest
 #   -> Verify+DuckDB oracle at sf0.01 AND sf0.001
 #   -> partition-invariance probe (CPUS=1 vs 4, row-exact)
@@ -34,6 +35,17 @@ if grep -rnE 'readStream|Trigger\.AvailableNow|awaitTermination|foreachBatch' sr
     awk -F: -v f="$runner" -v span="$span" 'BEGIN {split(span, b, ":")}
       !($1 == f && $2 >= b[1] && $2 <= b[2])' | grep .; then
   echo "streaming query code outside EventTime.replay" >&2
+  exit 1
+fi
+
+echo "== vector searches share one probe panel =="
+# LlmOps.isProbe (Spark) and LlmOps.probeSql (oracle) are the vec_id % 50
+# probe panel; a search composes them (Relational's l_orderkey % 50
+# sample is not a probe panel)
+if grep -rnE 'vec_id"?\)?[[:space:]]*%[[:space:]]*50\b' src/main/scala/graft --include='*.scala' |
+    grep -vE '^[^:]+:[0-9]+:[[:space:]]*(/?\*|//)' |
+    grep -vE '^src/main/scala/graft/ops/LlmOps.scala:[0-9]+:[[:space:]]*private def (isProbe|probeSql)\b'; then
+  echo "vec_id % 50 probe predicate outside LlmOps.isProbe/probeSql" >&2
   exit 1
 fi
 
