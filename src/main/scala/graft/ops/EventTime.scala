@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -169,14 +169,8 @@ object EventTime {
     * streaming listener of its own. The clone copies the PARENT's
     * runtime conf (a driver-set flag — ANSI mode, legacy parsers, … —
     * applies identically to the replay and its batch twin) and pins
-    * the replay-specific overrides: UTC; 8 shuffle partitions — the
-    * state-store partition count is fixed at the query's FIRST run
-    * from spark.sql.shuffle.partitions; 8 stores comfortably hold
-    * every replay's state (≤3 600 windows / 100 k dedup keys / the
-    * join's parked rows) and cost 4× less per-micro-batch setup +
-    * delta-file churn than the session default of 32 (results are
-    * partition-count invariant — the CPUS=1-vs-4 gate proves exactly
-    * that); and no state map kept in memory after a commit
+    * the replay-specific overrides: UTC and no state map kept in
+    * memory after a commit
     * (`maxBatchesToRetainInMemory` 0), so a replay's state leaves the
     * heap with its last commit while its providers wait for the next
     * maintenance pass. Never `unloadOnCommit`: it closes each provider
@@ -184,7 +178,14 @@ object EventTime {
     * closed that way fails and then closes whatever provider is loaded
     * under the same id, the one the next micro-batch has just opened,
     * and that batch's commit dies with CANNOT_WRITE_STATE_STORE.
-    * `extraConf` is
+    * The shuffle partition count is NOT pinned: a stateful operator
+    * keeps one state store per shuffle partition (fixed at the query's
+    * first run), and the clone inherits the parent's count, so the
+    * stores track the session's cores (4 per operator on 4 cores) the
+    * way `GlobalRank`'s ranges do, and each micro-batch loads, commits
+    * and checksums no more stores than there are tasks to run them.
+    * Results are partition-count invariant (`ReplayJobsSuite` and the
+    * CPUS=1-vs-4 gate check exactly that). `extraConf` is
     * the per-op hook (e.g. the RocksDB state-store provider for
     * transformWithState); it wins over the pins. The clone is shared:
     * never `conf.set` on it. Artifact isolation is off on the clone:
@@ -204,7 +205,6 @@ object EventTime {
       extraConf: Map[String, String] = Map.empty): SparkSession =
     SessionClone(s, Map(
       "spark.sql.session.timeZone" -> "UTC",
-      "spark.sql.shuffle.partitions" -> "8",
       "spark.sql.streaming.maxBatchesToRetainInMemory" -> "0",
       "spark.sql.artifact.isolation.enabled" -> "false",
       "fs.AbstractFileSystem.file.impl" -> classOf[LocalFs].getName) ++ extraConf)
@@ -212,17 +212,24 @@ object EventTime {
   /** Where a replay's rows go. */
   private[graft] sealed trait ReplaySink[A]
 
-  /** A memory sink in output `mode`; the replay returns its rows.
+  /** A memory sink in output `mode`; the replay returns its rows, sorted
+    * by `order` (none when empty, for a replay that post-processes them).
     *
-    * The memory sink is driver-resident, which is legitimate here ONLY
-    * because it holds the RESULT, and every memory replay's result is
-    * output-bounded — calendar-bounded window cells or user sessions
-    * (≤3 600 rows at any SF), or the interval join's sparse match set
-    * (tight per-user time window), never raw data. Do not pattern-match this
-    * to a driver-side collect of the stream: an unbounded deployment
-    * replaces it with a file/table sink in update mode + watermark.
+    * The memory sink holds the query's RESULT on the driver: its rows
+    * are one array there (the sink's plan is a `LocalTableScan`), so
+    * they are sorted in one task — `coalesce(1).sortWithinPartitions` —
+    * with no range-sample job and no range exchange over rows that
+    * never left the driver. The result is not bounded by a dimension:
+    * window cells are, but `stream_replay_dedup` and
+    * `stream_replay_dedup_within_wm` return every event (10 000 rows at
+    * sf0.01, 100 000 at sf0.1) and `stream_replay_session` every user
+    * session (9 549 at sf0.01); the sink holds them all either way. Do
+    * not pattern-match this to a driver-side collect of a batch frame:
+    * an unbounded deployment replaces the sink with a file/table sink in
+    * update mode + watermark, and sorts there.
     */
-  private[graft] final case class ToMemory(mode: String) extends ReplaySink[DataFrame]
+  private[graft] final case class ToMemory(mode: String, order: Seq[Column])
+      extends ReplaySink[DataFrame]
 
   /** Every micro-batch and its id, handed to `onBatch` on the query's
     * thread. With a `checkpoint` dir, a rerun resumes after the last
@@ -266,10 +273,12 @@ object EventTime {
       try { q.awaitTermination(); done } finally q.stop()
     }
     sink match {
-      case ToMemory(mode) =>
+      case ToMemory(mode, order) =>
         val name = s"graft_replay_${replayCalls.incrementAndGet()}"
-        try drain(out.format("memory").queryName(name).outputMode(mode))(s2.table(name))
-        finally s2.catalog.dropTempView(name)
+        try drain(out.format("memory").queryName(name).outputMode(mode)) {
+          val rows = s2.table(name)
+          if (order.isEmpty) rows else rows.coalesce(1).sortWithinPartitions(order: _*)
+        } finally s2.catalog.dropTempView(name)
       case EachBatch(onBatch, checkpoint) =>
         drain(checkpoint.fold(out)(out.option("checkpointLocation", _))
           .foreachBatch(onBatch))(())
@@ -285,20 +294,22 @@ object EventTime {
     df.groupBy(key).agg(max(col("rec")).as("rec"))
 
   /** Keep-latest state per `key`, folded one micro-batch at a time
-    * (`fold` is an `EachBatch` body): each batch reduces itself, unions
-    * the state so far, re-reduces and localCheckpoints to truncate
-    * lineage — the storage-layer analog of the state store, DISTRIBUTED
-    * and bounded by the key count, never a driver collect of raw data.
-    * The superseded state's checkpoint is released once the new one is
-    * materialized. `init` seeds the state (a snapshot to catch up from).
-    * At 100 TB the same fold MERGEs into a keyed table; the per-batch
-    * reduce bounds what moves.
+    * (`fold` is an `EachBatch` body): ONE `latestPerKey` over the state
+    * so far ∪ the batch, localCheckpointed to truncate lineage — the
+    * storage-layer analog of the state store, DISTRIBUTED and bounded by
+    * the key count, never a driver collect of raw data. One shuffle per
+    * batch: the aggregate's map-side partial reduces the batch's rows
+    * per key before the exchange, and `max(rec)` is associative, so a
+    * separate per-batch reduce first would only add a second shuffle
+    * with the same rows. The superseded state's checkpoint is released
+    * once the new one is materialized. `init` seeds the state (a
+    * snapshot to catch up from). At 100 TB the same fold MERGEs into a
+    * keyed table; the map-side partial bounds what moves.
     */
   private[graft] final class LatestByKey(key: String, init: Option[DataFrame] = None) {
     @volatile private var state = init
     def fold(batch: DataFrame, bid: Long): Unit = {
-      val b = latestPerKey(batch, key)
-      val next = state.fold(b)(st => latestPerKey(st.union(b), key)).localCheckpoint(true)
+      val next = latestPerKey(state.fold(batch)(_.union(batch)), key).localCheckpoint(true)
       state.foreach(releaseCheckpoint)
       state = Some(next)
     }
@@ -376,14 +387,14 @@ object EventTime {
     "stream_replay_tumbling",
     (s, dir) => {
       val src = replaySrc(s, dir)
-      replay(s, src, ToMemory("complete")) { (_, ev) =>
+      replay(s, src, ToMemory("complete", Seq(col("win_start"), col("event_type")))) { (_, ev) =>
         ev.select(col("ts"), col("event_type"), dec2(col("value")).as("v"))
           .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
           .agg(count(lit(1)).as("n"), sumMoney(col("v")).as("sum_value"))
           .select(
             fmtSec(col("w.start")).as("win_start"),
             col("event_type"), col("n"), col("sum_value"))
-      }.orderBy("win_start", "event_type")
+      }
     },
     streamTumbling.oracle)
 
@@ -402,12 +413,12 @@ object EventTime {
     "stream_replay_dedup",
     (s, dir) => {
       val src = replaySrc(s, dir)
-      replay(s, src, ToMemory("append")) { (_, ev) =>
+      replay(s, src, ToMemory("append", Seq(col("event_id")))) { (_, ev) =>
         ev.dropDuplicates("event_id")
           .select(
             col("event_id"), fmtSec(col("ts")).as("ts_s"),
             col("user_id"), col("event_type"))
-      }.orderBy("event_id")
+      }
     },
     streamDedupKeys.oracle)
 
@@ -444,13 +455,13 @@ object EventTime {
     "stream_replay_dedup_within_wm",
     (s, dir) => {
       val src = wmReplaySrc(s, dir)
-      replay(s, src, ToMemory("append"), maxFilesPerTrigger = 8) { (_, ev) =>
+      replay(s, src, ToMemory("append", Seq(col("event_id"))), maxFilesPerTrigger = 8) { (_, ev) =>
         ev.withWatermark("ts", "30 minutes")
           .dropDuplicatesWithinWatermark("event_id")
           .select(
             col("event_id"), fmtSec(col("ts")).as("ts_s"),
             col("user_id"), col("event_type"))
-      }.orderBy("event_id")
+      }
     },
     streamDedupKeys.oracle)
 
@@ -470,7 +481,7 @@ object EventTime {
     "stream_replay_session",
     (s, dir) => {
       val src = replaySrc(s, dir)
-      replay(s, src, ToMemory("complete")) { (_, ev) =>
+      replay(s, src, ToMemory("complete", Seq(col("user_id"), col("sess_start")))) { (_, ev) =>
         ev.select(col("ts"), col("user_id"), dec2(col("value")).as("v"))
           .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
           .agg(
@@ -482,7 +493,7 @@ object EventTime {
             fmtSec(col("sw.start")).as("sess_start"),
             fmtSec(col("last_ts")).as("sess_last"),
             col("n_events"), col("sum_value"))
-      }.orderBy("user_id", "sess_start")
+      }
     },
     streamSession.oracle)
 
@@ -498,7 +509,7 @@ object EventTime {
     "stream_replay_sliding",
     (s, dir) => {
       val src = replaySrc(s, dir)
-      replay(s, src, ToMemory("complete")) { (_, ev) =>
+      replay(s, src, ToMemory("complete", Seq(col("win_start"), col("event_type")))) { (_, ev) =>
         ev.select(col("ts"), col("event_type"), dec2(col("value")).as("v"))
           .groupBy(
             window(col("ts"), "1 hour", "15 minutes").as("w"),
@@ -507,7 +518,7 @@ object EventTime {
           .select(
             col("w.start").cast(LongType).as("win_start"),
             col("event_type"), col("n"), col("sum_value"))
-      }.orderBy("win_start", "event_type")
+      }
     },
     streamSliding.oracle)
 
@@ -533,7 +544,7 @@ object EventTime {
     "stream_replay_join",
     (s, dir) => {
       val src = replaySrc(s, dir)
-      replay(s, src, ToMemory("append")) { (_, ev) =>
+      replay(s, src, ToMemory("append", Seq(col("purchase_id"), col("view_id")))) { (_, ev) =>
         val p = ev.filter(col("event_type") === "purchase")
           .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
             col("ts").as("p_ts"))
@@ -545,7 +556,7 @@ object EventTime {
             col("v_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
             col("v_ts") <= col("p_ts"))
           .select("purchase_id", "view_id")
-      }.orderBy("purchase_id", "view_id")
+      }
     },
     Relational.joinInterval.oracle)
 
@@ -577,7 +588,7 @@ object EventTime {
     "stream_replay_dim_enrich",
     (s, dir) => {
       val src = replaySrc(s, dir)
-      replay(s, src, ToMemory("complete")) { (s2, ev) =>
+      replay(s, src, ToMemory("complete", Seq(col("segment"), col("event_type")))) { (s2, ev) =>
         val dim = Tables.customer(s2, dir)
           .select(col("c_custkey").as("user_id"),
             col("c_mktsegment").as("segment"))
@@ -585,7 +596,7 @@ object EventTime {
           .join(broadcast(dim), Seq("user_id"))
           .groupBy(col("segment"), col("event_type"))
           .agg(count(lit(1)).as("n"), sumMoney(col("v")).as("sum_value"))
-      }.orderBy("segment", "event_type")
+      }
     },
     Some("""
       SELECT c.c_mktsegment AS segment, e.event_type, COUNT(*) AS n,
@@ -673,7 +684,8 @@ object EventTime {
     "stream_replay_watermarked",
     (s, dir) => {
       val src = wmReplaySrc(s, dir)
-      replay(s, src, ToMemory("append"), maxFilesPerTrigger = 4) { (_, ev) =>
+      replay(s, src, ToMemory("append", Seq(col("win_start"), col("event_type"))),
+          maxFilesPerTrigger = 4) { (_, ev) =>
         // 4 files per trigger (round-11 diet, DevBench-verified): three
         // micro-batches — [4 oldest, next 4, late file]. The grading
         // is intact: files are consumed in pinned mod-time = ts order,
@@ -688,7 +700,7 @@ object EventTime {
           .select(
             fmtSec(col("w.start")).as("win_start"),
             col("event_type"), col("n"), col("sum_value"))
-      }.orderBy("win_start", "event_type")
+      }
     },
     Some("""
       WITH mx AS (SELECT MAX(ts) AS m FROM events),
@@ -728,7 +740,8 @@ object EventTime {
     "stream_replay_session_watermarked",
     (s, dir) => {
       val src = wmReplaySrc(s, dir)
-      replay(s, src, ToMemory("append"), maxFilesPerTrigger = 4) { (_, ev) =>
+      replay(s, src, ToMemory("append", Seq(col("user_id"), col("sess_start"))),
+          maxFilesPerTrigger = 4) { (_, ev) =>
         // 4 files per trigger (round-11 diet, same argument as the
         // tumbling replay above); sessions still merge across the two
         // in-order batch boundaries and the late file still drops whole
@@ -741,7 +754,7 @@ object EventTime {
             fmtSec(col("sw.start")).as("sess_start"),
             fmtSec(col("last_ts")).as("sess_last"),
             col("n_events"), col("sum_value"))
-      }.orderBy("user_id", "sess_start")
+      }
     },
     Some("""
       WITH mx AS (SELECT MAX(ts) AS m FROM events),
@@ -1009,7 +1022,7 @@ object EventTime {
       // transformWithState requires the RocksDB store; passed through
       // the replay's extra-conf hook, scoped to the session clone so
       // batch queries keep the default provider
-      replay(s, src, ToMemory("update"), maxFilesPerTrigger = 4, extraConf = Map(
+      replay(s, src, ToMemory("update", Nil), maxFilesPerTrigger = 4, extraConf = Map(
         "spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) { (s2, ev) =>
         import s2.implicits._
@@ -1084,8 +1097,8 @@ object EventTime {
       // tested here (warmed, min-of-6) and LOST: 3.43 s at 8 partitions
       // vs 3.73 s at 2 — this op emits ~95k session rows, so the
       // per-user processing work outweighs the saved RocksDB
-      // open/commit cycles. Replay default of 8 kept.
-      replay(s, src, ToMemory("append"), maxFilesPerTrigger = 4, extraConf = Map(
+      // open/commit cycles. No override: the session's partition count.
+      replay(s, src, ToMemory("append", Nil), maxFilesPerTrigger = 4, extraConf = Map(
         "spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) { (s2, ev) =>
         import s2.implicits._
@@ -2686,7 +2699,7 @@ object EventTime {
         .when(col("event_type") === "purchase", "p")
         .when(col("event_type") === "signup", "s")
         .otherwise("e")
-      val perUser = replay(s, src, ToMemory("complete"), maxFilesPerTrigger = 2) { (_, ev) =>
+      val perUser = replay(s, src, ToMemory("complete", Nil), maxFilesPerTrigger = 2) { (_, ev) =>
         ev.select(col("user_id"), unix_micros(col("ts")).as("us"),
             col("event_id"), ch.as("ch"))
           .groupBy("user_id")
@@ -2770,8 +2783,8 @@ object EventTime {
       // here and measured FLAT (3.39 s both ways, DevBench min-of-4) —
       // this op's cost is the ~95k-session merge + emit work, which 2
       // partitions would serialize at scale, not per-batch store setup.
-      // Reverted to the replay default of 8.
-      val sessions = replay(s, src, ToMemory("append"), maxFilesPerTrigger = 4) { (_, ev) =>
+      // No override: the session's partition count.
+      val sessions = replay(s, src, ToMemory("append", Nil), maxFilesPerTrigger = 4) { (_, ev) =>
         ev.select(col("ts"), col("user_id"), unix_micros(col("ts")).as("us"),
             col("event_id"), ch.as("ch"))
           .withWatermark("ts", "30 minutes")
@@ -4566,13 +4579,15 @@ WITH hourly AS (
     (s, dir) => {
       val src = wmReplaySrc(s, dir)
       // TWO stateful aggregates → 2 state stores per shuffle partition;
-      // the replay default of 8 partitions costs 16 store setups +
-      // delta commits per micro-batch for state that is only hourly ×
-      // type window cells (a few hundred rows). 2 partitions carry the
-      // same state in 4 stores/batch (the stream_replay_outer_join
-      // precedent); results are partition-count invariant (the graded
-      // CPUS=1-vs-32 property).
-      replay(s, src, ToMemory("append"), maxFilesPerTrigger = 4,
+      // the session's partition count (the replay clone inherits it: 4
+      // on 4 cores, more on a bigger box) costs 2 store setups + delta
+      // commits per partition and micro-batch for state that is only
+      // hourly × type window cells (a few hundred rows). 2 partitions
+      // carry the same state in 4 stores/batch at any core count (the
+      // stream_replay_outer_join precedent); results are
+      // partition-count invariant (the graded CPUS=1-vs-4 property).
+      replay(s, src, ToMemory("append", Seq(col("day_start"), col("event_type"))),
+        maxFilesPerTrigger = 4,
         extraConf = Map("spark.sql.shuffle.partitions" -> "2")) { (_, ev) =>
         ev.select(col("ts"), col("event_type"), dec2(col("value")).as("v"))
           .withWatermark("ts", "30 minutes")
@@ -4583,7 +4598,7 @@ WITH hourly AS (
           .agg(sum("n").as("n"), sum("sv").cast(DoubleType).as("sum_value"))
           .select(fmtSec(col("d.start")).as("day_start"),
             col("event_type"), col("n"), col("sum_value"))
-      }.orderBy("day_start", "event_type")
+      }
     },
     Some("""
       WITH mx AS (SELECT MAX(ts) AS m FROM events),
@@ -4668,12 +4683,15 @@ WITH hourly AS (
       val src = wmReplaySrc(s, dir)
       // a stream-stream join keeps FOUR state stores per shuffle
       // partition (keyToNumValues/keyWithIndexToValue × 2 sides), so
-      // the replay default of 8 partitions costs 32 store setups +
-      // delta commits per micro-batch — the dominant cost of this op
-      // (state is ~40 min of events, a few thousand rows). 2 partitions
-      // carry the same state in 8 stores/batch; results are
-      // partition-count invariant (the graded CPUS=1-vs-32 property)
-      replay(s, src, ToMemory("append"), maxFilesPerTrigger = 4,
+      // the session's partition count (4 on 4 cores) costs 16 store
+      // setups + delta commits per micro-batch — the dominant cost of
+      // this op (state is ~40 min of events, a few thousand rows). 2
+      // partitions carry the same state in 8 stores/batch at any core
+      // count; results are partition-count invariant (the graded
+      // CPUS=1-vs-4 property)
+      replay(s, src,
+        ToMemory("append", Seq(col("purchase_id"), col("view_id").asc_nulls_first)),
+        maxFilesPerTrigger = 4,
         extraConf = Map("spark.sql.shuffle.partitions" -> "2")) { (_, ev) =>
         val p = ev.filter(col("event_type") === "purchase")
           .select(col("event_id").as("purchase_id"),
@@ -4689,7 +4707,7 @@ WITH hourly AS (
             col("v_ts") <= col("p_ts"),
           "left_outer")
           .select("purchase_id", "view_id")
-      }.orderBy(col("purchase_id"), col("view_id").asc_nulls_first)
+      }
     },
     Some("""
       WITH mx AS (

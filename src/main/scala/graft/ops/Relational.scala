@@ -276,7 +276,7 @@ object Relational {
       val folded = foldLatest(morLogRows(s, dir), "o_orderkey")
         .select("o_orderkey", "status", "price")
       folded.write.mode("overwrite").parquet(s"$tmp/compacted")
-      s.read.parquet(s"$tmp/compacted")
+      s.read.schema(folded.schema).parquet(s"$tmp/compacted")
         .groupBy(col("status"), (col("o_orderkey") % 3).as("shard"))
         .agg(count(lit(1)).as("n"),
           sum(dec2(col("price"))).cast(DoubleType).as("total_price"),
@@ -695,7 +695,8 @@ object Relational {
     * no-resurrection/price-image assertions the aggregate can't see.
     *
     * Scale shape: state is bounded by |live keys| and each micro-batch
-    * reduces itself before touching state (per-batch map-side fold);
+    * folds into it through one shuffle (`LatestByKey`: the aggregate's
+    * map-side partial reduces the batch's rows before the exchange);
     * at 100 TB the same foreachBatch body MERGEs into a keyed table
     * and the file source paces by maxFilesPerTrigger — catch-up cost
     * rides the delta span, never the table.
@@ -1701,7 +1702,7 @@ object Relational {
           .parquet(s"$tmp/$c")
       }
       codecs.map { c =>
-          s.read.parquet(s"$tmp/$c").withColumn("codec", lit(c))
+          s.read.schema(agg.schema).parquet(s"$tmp/$c").withColumn("codec", lit(c))
         }.reduce(_.unionByName(_))
         .select("codec", "s_nationkey", "n_supp", "bal")
         .orderBy("codec", "s_nationkey")
@@ -3999,12 +4000,12 @@ object Relational {
     "scan_nested_prune",
     (s, dir) => {
       val tmp = Scratch.perCall(s, "scan_nested")
-      Tables.documents(s, dir)
+      val nested = Tables.documents(s, dir)
         .select(col("doc_id"),
           struct(col("lang"), col("source"), col("n_chars")).as("meta"),
           split(col("text"), " ").as("words"))
-        .write.mode("overwrite").parquet(s"$tmp/docs_nested")
-      s.read.parquet(s"$tmp/docs_nested")
+      nested.write.mode("overwrite").parquet(s"$tmp/docs_nested")
+      s.read.schema(nested.schema).parquet(s"$tmp/docs_nested")
         .groupBy(col("meta.lang").as("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("meta.n_chars")).as("sum_chars"))
         .orderBy("lang")
@@ -4149,11 +4150,12 @@ object Relational {
     "sink_clustered_prune",
     (s, dir) => {
       val tmp = Scratch.perCall(s, "sink_cluster")
-      Tables.orders(s, dir)
+      val orders = Tables.orders(s, dir)
+      orders
         .repartitionByRange(8, col("o_totalprice"), col("o_orderkey"))
         .sortWithinPartitions("o_totalprice", "o_orderkey")
         .write.mode("overwrite").parquet(s"$tmp/orders_by_price")
-      s.read.parquet(s"$tmp/orders_by_price")
+      s.read.schema(orders.schema).parquet(s"$tmp/orders_by_price")
         .filter(col("o_totalprice") >= 100000.0 && col("o_totalprice") < 110000.0)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),

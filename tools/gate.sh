@@ -8,7 +8,9 @@
 #   -> partition-invariance probe (CPUS=1 vs 4, row-exact)
 #   -> one untraced perfbench run per workload (prints latency_p90_s,
 #      throughput_qps and heap_retained_mb)
-#   -> one traced perfbench run per workload
+#   -> one traced perfbench run per workload (prints the per-execution
+#      Spark jobs, stages and tasks, shuffle exchanges, streaming batches
+#      and addBatch seconds)
 #   -> Bench sf0.1.
 # Exits nonzero on the first failure. ~8 min on this machine.
 set -euo pipefail
@@ -94,14 +96,16 @@ for k in ("latency_p90_s", "throughput_qps", "heap_retained_mb"):
 done
 
 # the counters that do not drift between runs, per execution: every
-# perf claim cites these next to its timings
+# perf claim cites these next to its timings (spark.tasks and the
+# streaming batch count and addBatch time are what a replay claim rests on)
 for w in analytics_mix ingest_mix; do
   echo "== perfbench $w (traced) =="
   python3 perfbench/run.py --workload "$w" --seed 1 --seconds 20 --trace 1 | tail -n 1 |
     python3 -c '
 import json, sys
 m = json.loads(sys.stdin.read())["metrics"]
-for k in ("spark.jobs", "spark.stages", "plan.shuffle_exchanges"):
+for k in ("spark.jobs", "spark.stages", "spark.tasks", "plan.shuffle_exchanges",
+          "streaming.batches", "streaming.add_batch_s"):
     print(k, round(m[k]["value"], 2))'
 done
 
